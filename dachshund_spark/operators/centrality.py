@@ -34,27 +34,6 @@ from pyspark.sql import functions as F
 from ..plans.superstep import cut_lineage, iterate
 from .builders import symmetrized, vertices
 
-# Measurement hook (tools/ab_visited_window.py): True restores the old
-# anti-join-against-every-level BFS dedup in betweenness_superstep /
-# harmonic_centrality.  The shipped False path anti-joins against the
-# last TWO level leaves only — result-identical by the BFS distance
-# property (see the comment at the betweenness_superstep dedup site).
-_VISITED_WINDOW_FULL = False
-
-# Measurement hook (tools/ab_bwd_shj.py): shuffle_hash-hint the small
-# build sides of betweenness_superstep's backward-pass joins instead of
-# letting the stat-free cut leaves fall to sort-merge (which sorts the
-# |level d| x degree fan-out rows every depth).
-_BWD_SHUFFLE_HASH = True
-
-# Measurement hook (tools/ab_lazy_cuts.py): True restores the old
-# eager-cut-then-act two-jobs-per-depth shape in betweenness_superstep /
-# harmonic_centrality.  The shipped False path leaves each per-depth cut
-# lazy so the depth's single action (the frontier count, or the
-# accumulator's eager cut) materializes it in the same job — the SCC trim
-# loop's fold pattern applied here.
-_EAGER_STEP_CUTS = False
-
 
 def eigenvector_centrality(
     edges: DataFrame, eps: float = 0.001, max_iter: int = 1000
@@ -451,18 +430,9 @@ def betweenness_superstep(
     max_sources: int | None = 100,
     seed: int = 0,
     max_depth: int = 200,
-    defer_fold: bool = False,
 ) -> DataFrame:
     """Brandes betweenness for graphs over ``betweenness``'s per-task
     adjacency budget: the graph never leaves the cluster.
-
-    ``defer_fold``: fold the per-depth dependency rows into the running
-    (v, partial) accumulator once at the END (one union + one groupBy)
-    instead of per depth.  Saves one cut-action + V-row checkpoint per
-    depth at the cost of holding every depth's delta blocks (~|sources|x|V|
-    rows total, the same order as the forward levels) until the final
-    fold.  Default False: per-depth folding keeps peak storage at one
-    depth's delta, the right trade on a memory-bound cluster.
 
     All selected sources run SIMULTANEOUSLY as DataFrame supersteps keyed
     by (source, v) — forward BFS accumulates shortest-path counts sigma
@@ -544,31 +514,25 @@ def betweenness_superstep(
         # adjacent to a distance-d vertex, so its true distance is d-1, d
         # or d+1 — an already-visited candidate can only live in levels d
         # or d-1.  Anti-joining against those two leaves is therefore
-        # result-identical to anti-joining against every level (asserted
-        # per pair in tools/ab_visited_window.py) while scanning and
-        # shuffling O(2 levels) instead of O(total visited) per depth —
+        # result-identical to anti-joining against every level (identical
+        # on every pair in BENCH/AB_VISITED_WINDOW_r07.txt) while scanning
+        # and shuffling O(2 levels) instead of O(total visited) per depth —
         # the old full union re-shuffled the entire accumulated state
         # (up to |S|x|V| rows) every round.
-        if _VISITED_WINDOW_FULL:
-            visited = levels[0].select("source", "v")
-            for lv in levels[1:]:
-                visited = visited.union(lv.select("source", "v"))
-        else:
-            visited = levels[depth].select("source", "v")
-            if depth > 0:
-                visited = visited.union(
-                    levels[depth - 1].select("source", "v")
-                )
+        visited = levels[depth].select("source", "v")
+        if depth > 0:
+            visited = visited.union(levels[depth - 1].select("source", "v"))
         cand = msgs.groupBy("source", "v").agg(F.sum("sigma").alias("sigma"))
         # lazy cut: the count() below materializes the checkpoint in the
-        # same job — one driver job per depth instead of two.  The leaves
-        # this cut reads stay live until the backward pass, so no release
-        # ordering depends on eagerness here.
+        # same job — one driver job per depth instead of two
+        # (BENCH/AB_LAZY_CUTS_r07.txt).  The leaves this cut reads stay
+        # live until the backward pass, so no release ordering depends on
+        # eagerness here.
         new = cut_lineage(
             cand.join(visited, ["source", "v"], "left_anti").select(
                 "source", "v", "sigma"
             ),
-            eager=_EAGER_STEP_CUTS,
+            eager=False,
         )
         if new.count() == 0:
             release(new)
@@ -586,8 +550,6 @@ def betweenness_superstep(
     # round so every intermediate can be released immediately
     acc = None  # running sum over sources+depths of delta(source, v)
     delta_prev = None  # delta rows for depth d+1
-    deps = []  # defer_fold: lazy per-depth dep projections over cut leaves
-    pending_delta = []  # defer_fold: superseded delta leaves, freed at fold
     for d in range(depth - 1, -1, -1):
         nodes_d = levels[d]
         succ = levels[d + 1].select(
@@ -598,9 +560,7 @@ def betweenness_superstep(
         if delta_prev is not None:
             dw_side = delta_prev.select(
                 "source", F.col("v").alias("w"), F.col("delta").alias("dw")
-            )
-            if _BWD_SHUFFLE_HASH:
-                dw_side = dw_side.hint("shuffle_hash")
+            ).hint("shuffle_hash")
             succ = succ.join(
                 dw_side,
                 ["source", "w"],
@@ -619,15 +579,12 @@ def betweenness_superstep(
         # succ (|level d+1| rows) is the smaller side of the join against
         # the |level d| x degree fan-out: build it as a per-partition
         # hash table instead of sort-merging, which sorted the fan-out
-        # rows every depth (stat-free cut leaves otherwise fall to SMJ)
-        if _BWD_SHUFFLE_HASH:
-            succ = succ.hint("shuffle_hash")
-        # default path: delta_d stays LAZY and the accumulator's eager
-        # cut below materializes it in the same job — one driver job per
-        # backward depth instead of two.  defer_fold keeps the eager cut:
-        # its deps are only folded once at the end, and an unmaterialized
-        # chain of lazy cuts would defeat the lineage truncation the
-        # per-depth checkpoints exist for.
+        # rows every depth (stat-free cut leaves otherwise fall to SMJ;
+        # BENCH/AB_BWD_SHJ_r07.txt)
+        succ = succ.hint("shuffle_hash")
+        # delta_d stays LAZY and the accumulator's eager cut below
+        # materializes it in the same job — one driver job per backward
+        # depth instead of two
         delta_d = cut_lineage(
             links.join(succ, ["source", "w"])
             .groupBy("source", "v")
@@ -638,41 +595,27 @@ def betweenness_superstep(
                     / F.col("sigma_w")
                 ).alias("delta")
             ),
-            eager=defer_fold or _EAGER_STEP_CUTS,
+            eager=False,
         )
         prev_delta = delta_prev
         delta_prev = delta_d
         dep = delta_d.filter(F.col("v") != F.col("source")).select(
             "v", F.col("delta").alias("partial")
         )
-        if defer_fold:
-            if prev_delta is not None:
-                pending_delta.append(prev_delta)  # dep still reads its blocks
-            deps.append(dep)
-        else:
-            folded = dep if acc is None else acc.union(dep)
-            new_acc = cut_lineage(
-                folded.groupBy("v").agg(F.sum("partial").alias("partial"))
-            )
-            release(acc)
-            # the eager new_acc cut has materialized delta_d's checkpoint;
-            # only now is the previous delta (which delta_d's recompute
-            # lineage read) safe to free
-            release(prev_delta)
-            acc = new_acc
+        folded = dep if acc is None else acc.union(dep)
+        new_acc = cut_lineage(
+            folded.groupBy("v").agg(F.sum("partial").alias("partial"))
+        )
+        release(acc)
+        # the eager new_acc cut has materialized delta_d's checkpoint;
+        # only now is the previous delta (which delta_d's recompute
+        # lineage read) safe to free
+        release(prev_delta)
+        acc = new_acc
         # levels[d+1] was read for the last time (as succ this round and
         # as delta_prev's base last round) — free its blocks now instead
         # of holding every frontier until the end
         release(levels[d + 1])
-    if defer_fold and deps:
-        folded = deps[0]
-        for dp in deps[1:]:
-            folded = folded.union(dp)
-        acc = cut_lineage(
-            folded.groupBy("v").agg(F.sum("partial").alias("partial"))
-        )
-        for dl in pending_delta:
-            release(dl)
     release(delta_prev)
     # the backward loop released levels[1..depth]; only levels[0] (the
     # sources frontier) is still held — single-release invariant
@@ -702,10 +645,10 @@ def harmonic_centrality(
     centrality files are eigenvector_centrality.rs and betweenness.rs);
     this is a scale-path addition reusing the betweenness_superstep
     forward machinery: all sources run simultaneously as (source, v)
-    BFS frontiers, one edge join + anti-join per depth, each level an
-    eager cut leaf.  Source sampling is the shared deterministic
-    md5(seed|v) rank (``_select_sources``), so runs are reproducible
-    across engines.
+    BFS frontiers, one edge join + anti-join per depth, each level a
+    lazy cut leaf materialized by that depth's frontier count.  Source
+    sampling is the shared deterministic md5(seed|v) rank
+    (``_select_sources``), so runs are reproducible across engines.
 
     Distributed shape: the per-depth state is the NEW frontier only
     (same O(|sources| x |V|) bound and release discipline as the
@@ -740,20 +683,14 @@ def harmonic_centrality(
         )
         # last-two-levels dedup window — result-identical to the full
         # visited union by the BFS distance property (see the comment in
-        # betweenness_superstep; asserted in tools/ab_visited_window.py)
-        if _VISITED_WINDOW_FULL:
-            visited = levels[0]
-            for lv in levels[1:]:
-                visited = visited.union(lv)
-        else:
-            visited = levels[depth]
-            if depth > 0:
-                visited = visited.union(levels[depth - 1])
+        # betweenness_superstep; BENCH/AB_VISITED_WINDOW_r07.txt)
+        visited = levels[depth]
+        if depth > 0:
+            visited = visited.union(levels[depth - 1])
         # lazy cut — the count() materializes it (one job per depth; see
         # the betweenness_superstep forward loop)
         new = cut_lineage(
-            msgs.join(visited, ["source", "v"], "left_anti"),
-            eager=_EAGER_STEP_CUTS,
+            msgs.join(visited, ["source", "v"], "left_anti"), eager=False
         )
         if new.count() == 0:
             release(new)

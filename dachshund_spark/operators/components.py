@@ -34,12 +34,6 @@ from ..plans.superstep import (
 )
 from .builders import symmetrized, vertices
 
-# Measurement hook (tools/ab_trim_shape.py): True restores the old
-# two-anti-joins + union + distinct shape for the SCC trim layer's
-# trivial-vertex set; the shipped False path computes the set-identical
-# remaining \ (srcs ∩ dsts) with one semi-join + one anti-join.
-_TRIM_UNION_SHAPE = False
-
 
 def connected_components(
     edges: DataFrame,
@@ -383,8 +377,7 @@ def _bidirectional_min_labels(
 
 
 def strongly_connected_components(
-    edges: DataFrame, max_outer: int = 50, max_iter: int = 100,
-    trim: bool = True,
+    edges: DataFrame, max_outer: int = 50, max_iter: int = 100
 ) -> DataFrame:
     """Distributed SCC for the single-giant-digraph path — the scale
     counterpart of the per-graph Tarjan kernel
@@ -402,10 +395,10 @@ def strongly_connected_components(
     condensation is mostly a deep DAG around a giant core, trimming
     absorbs the DAG layers (from both ends at once) and leaves the
     expensive peel only the genuinely cyclic residue.  Interleaved
-    same-session A/B (tools/ab_scc_trim.py, 2/2 pairs each, alternating
-    order): banded-page bow-tie digraph 21.9/19.0 s vs 127.6/103.5 s
-    (~5-6x), event digraph 12.6/11.8 s vs 36.1/34.7 s (~3x); outputs
-    asserted identical per pair.  See BENCH/PLANS.md.
+    same-session A/B (BENCH/PLANS.md, "SCC trimming"; 2/2 pairs each,
+    alternating order): banded-page bow-tie digraph 21.9/19.0 s vs
+    127.6/103.5 s (~5-6x), event digraph 12.6/11.8 s vs 36.1/34.7 s
+    (~3x); outputs asserted identical per pair.
 
     Peel: per outer round compute f(v) = min id that reaches v (hash-min
     propagation along edges) and b(v) = min id v reaches (propagation
@@ -428,7 +421,6 @@ def strongly_connected_components(
     n_left = remaining.count()
     for _ in range(max_outer):
         # ---- trim to exhaustion: settle acyclic-by-degree singletons ----
-        # (``trim=False`` keeps the pure peel for A/B measurement)
         # One driver job per trim layer: trivial's count materializes its
         # lazy cut, and the successor remaining/cur cuts stay lazy until
         # the NEXT layer's count (or the post-loop seal) computes them —
@@ -436,27 +428,20 @@ def strongly_connected_components(
         # lineage-free successor exists (the engine's deferred-release
         # discipline), so a layer costs 1 job instead of the old 3.
         pending_trim: list[DataFrame] = []
-        while trim and n_left > 0:
+        while n_left > 0:
             srcs = cur.select(F.col("src").alias("v")).distinct()
             dsts = cur.select(F.col("dst").alias("v")).distinct()
-            if _TRIM_UNION_SHAPE:
-                trivial = cut_lineage(
-                    remaining.join(srcs, "v", "left_anti")
-                    .union(remaining.join(dsts, "v", "left_anti"))
-                    .distinct(),
-                    eager=False,
-                )
-            else:
-                # (remaining \ srcs) ∪ (remaining \ dsts) ==
-                # remaining \ (srcs ∩ dsts): one semi-join (both distinct
-                # outputs are already hash(v)-partitioned, so it adds no
-                # exchange) plus one anti-join replaces two anti-joins +
-                # union + distinct — one fewer pass over `remaining` and
-                # one fewer exchange per trim layer
-                both = srcs.join(dsts, "v", "left_semi")
-                trivial = cut_lineage(
-                    remaining.join(both, "v", "left_anti"), eager=False
-                )
+            # (remaining \ srcs) ∪ (remaining \ dsts) ==
+            # remaining \ (srcs ∩ dsts): one semi-join (both distinct
+            # outputs are already hash(v)-partitioned, so it adds no
+            # exchange) plus one anti-join replaces two anti-joins +
+            # union + distinct — one fewer pass over `remaining` and one
+            # fewer exchange per trim layer (BENCH/AB_TRIM_SHAPE_r07.txt:
+            # outputs md5-identical, speed a tie)
+            both = srcs.join(dsts, "v", "left_semi")
+            trivial = cut_lineage(
+                remaining.join(both, "v", "left_anti"), eager=False
+            )
             k = trivial.count()
             # trivial is now a materialized leaf: the PREVIOUS layer's lazy
             # remaining/cur cuts were computed (and checkpointed) by this

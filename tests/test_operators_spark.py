@@ -208,14 +208,25 @@ def test_betweenness_edge_budget_and_superstep_fallback(spark):
     # over-budget graphs fail fast with guidance instead of a per-task OOM
     with pytest.raises(RuntimeError, match="edge_budget"):
         betweenness(e, edge_budget=10)
-    # the distributed-superstep fallback matches the per-task kernel
-    # exactly on the same sources (all 34 here, < max_sources)
-    exact = {r["v"]: r["betweenness"] for r in betweenness(e).collect()}
-    got = {
-        r["v"]: r["betweenness"] for r in betweenness_superstep(e).collect()
-    }
-    assert set(got) == set(exact)
-    assert all(abs(got[v] - exact[v]) <= 1e-6 for v in exact)
+    # the distributed-superstep fallback matches the per-task kernel on
+    # the same sources (all of them here, < max_sources): on karate, and
+    # on a deep layered graph (eccentricity 7, with same-layer edges)
+    # where the forward pass's two-level BFS dedup window skips the
+    # older levels
+    layers, width = 8, 3
+    deep = [
+        (l * width + j, (l + 1) * width + (j + k) % width)
+        for l in range(layers - 1) for j in range(width) for k in (0, 1)
+    ] + [(l * width, l * width + 1) for l in range(0, layers, 2)]
+    for graph in (KARATE_CLUB_EDGES, deep):
+        g = B.edges_df(spark, graph)
+        exact = {r["v"]: r["betweenness"] for r in betweenness(g).collect()}
+        got = {
+            r["v"]: r["betweenness"]
+            for r in betweenness_superstep(g).collect()
+        }
+        assert set(got) == set(exact)
+        assert all(abs(got[v] - exact[v]) <= 1e-9 for v in exact)
     got_s = {
         r["v"]: r["betweenness"]
         for r in betweenness_superstep(e, sources=[1, 2, 3]).collect()
@@ -225,47 +236,6 @@ def test_betweenness_edge_budget_and_superstep_fallback(spark):
         for r in betweenness(e, sources=[1, 2, 3]).collect()
     }
     assert all(abs(got_s[v] - exact_s[v]) <= 1e-6 for v in exact_s)
-    # defer_fold (one union-fold after the backward pass) is bit-identical
-    # to the per-depth default — same joins, same aggregation grouping
-    deferred = {
-        r["v"]: r["betweenness"]
-        for r in betweenness_superstep(e, defer_fold=True).collect()
-    }
-    assert deferred == got
-
-
-def test_bfs_visited_window_matches_full_union(spark):
-    # the two-level BFS dedup window (anti-join against levels d and d-1
-    # only) must be bit-identical to the old anti-join against every
-    # level: a candidate produced by expanding depth d has distance in
-    # {d-1, d, d+1}, so already-visited candidates live in exactly those
-    # two leaves
-    from dachshund_spark.operators import centrality as C
-
-    e = B.edges_df(spark, KARATE_CLUB_EDGES)
-    try:
-        C._VISITED_WINDOW_FULL = True
-        bet_full = sorted(
-            (r["v"], r["betweenness"])
-            for r in C.betweenness_superstep(e).collect()
-        )
-        harm_full = sorted(
-            (r["v"], r["harmonic"])
-            for r in C.harmonic_centrality(e).collect()
-        )
-        C._VISITED_WINDOW_FULL = False
-        bet_win = sorted(
-            (r["v"], r["betweenness"])
-            for r in C.betweenness_superstep(e).collect()
-        )
-        harm_win = sorted(
-            (r["v"], r["harmonic"])
-            for r in C.harmonic_centrality(e).collect()
-        )
-    finally:
-        C._VISITED_WINDOW_FULL = False
-    assert bet_win == bet_full
-    assert harm_win == harm_full
 
 
 def test_distributed_weighted_coreness(spark):
