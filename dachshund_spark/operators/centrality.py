@@ -74,17 +74,20 @@ def eigenvector_centrality(
                 (F.col("y") / F.lit(m)).alias("xprev"),
                 F.abs(F.col("y") / F.lit(m) - F.col("xprev")).alias("d"),
             )
-            .persist()
         )
-        agg = new_state.agg(
-            F.max("y").alias("m"),
-            F.sum("d").alias("l1"),
-            F.count("*").alias("rows"),
-        ).collect()[0]
-        scale["m"] = float(agg["m"])
-        # first superstep has no previous change to report
-        delta = float("inf") if i == 0 else float(agg["l1"])
-        return (new_state, delta, int(agg["rows"]))
+
+        def measure(held: DataFrame):
+            agg = held.agg(
+                F.max("y").alias("m"),
+                F.sum("d").alias("l1"),
+                F.count("*").alias("rows"),
+            ).collect()[0]
+            scale["m"] = float(agg["m"])
+            # first superstep has no previous change to report
+            delta = float("inf") if i == 0 else float(agg["l1"])
+            return delta, int(agg["rows"])
+
+        return new_state, measure
 
     result = iterate(state0, step, max_iter=max_iter, tol=eps)
     if result.converged:

@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 
 from ..plans.superstep import (
     CheckpointManager,
-    SuperstepResult,
     cut_lineage,
     iterate,
     release,
@@ -84,13 +83,16 @@ def connected_components(
                 ).alias("active"),
             )
         )
-        # single action per superstep: materialize + (changed, rows)
-        new_state = new_state.persist()
-        agg = new_state.agg(
-            F.sum(F.col("active").cast("long")).alias("changed"),
-            F.count("*").alias("rows"),
-        ).collect()[0]
-        return new_state, float(agg["changed"] or 0), int(agg["rows"])
+
+        def measure(held: DataFrame):
+            # single action per superstep: materialize + (changed, rows)
+            agg = held.agg(
+                F.sum(F.col("active").cast("long")).alias("changed"),
+                F.count("*").alias("rows"),
+            ).collect()[0]
+            return float(agg["changed"] or 0), int(agg["rows"])
+
+        return new_state, measure
 
     result = iterate(
         state0,
@@ -264,7 +266,7 @@ def _bidirectional_min_labels(
     so the superstep count is max(f-depth, b-depth) instead of their sum
     — half the driver rounds of two sequential propagations.
 
-    Raises if ``max_iter`` supersteps pass with changes pending (a
+    Raises if ``max_iter`` supersteps pass and labels still change (a
     truncated label set would let strongly_connected_components silently
     split a large-diameter SCC).
 
@@ -282,26 +284,15 @@ def _bidirectional_min_labels(
     )
     adj = fwd.union(bwd).repartition("src").persist()
     adj.count()
-    state = verts.select(
+    state0 = verts.select(
         "v",
         F.col("v").alias("f"),
         F.col("v").alias("b"),
         F.lit(True).alias("cf"),
         F.lit(True).alias("cb"),
-    ).persist()
-    state.count()
-    # deferred-release window: states whose cached blocks are still
-    # reachable through a live successor's lineage (a persisted round's
-    # plan reads its predecessor on recompute).  They are freed only once
-    # a cut_lineage product — which carries NO lineage — has materialized
-    # on top of them, so nothing recomputable ever references freed
-    # blocks.  cut_every=1 degenerates to cut-and-release every round;
-    # the windowed default amortizes the localCheckpoint partition copy
-    # over `cut_every` rounds (the A/B that set the default is in
-    # BENCH/PLANS.md round 6).
-    pending: list[DataFrame] = []
-    converged = False
-    for i in range(max_iter):
+    )
+
+    def step(state: DataFrame, i: int):
         # deliberate state-side strategy: on cut rounds the stats-free
         # leaf would otherwise make the planner broadcast the cached
         # adjacency (serial 2|E|-row build per round)
@@ -329,51 +320,30 @@ def _bidirectional_min_labels(
             (F.coalesce("fc", F.col("f")) < F.col("f")).alias("cf"),
             (F.coalesce("bc", F.col("b")) < F.col("b")).alias("cb"),
         )
-        is_cut_round = (i + 1) % cut_every == 0
-        if is_cut_round:
-            # lazy cut: the agg below materializes the checkpoint in the
-            # same job — one action per superstep either way
-            new_state = cut_lineage(new_state, eager=False)
-        else:
-            new_state = new_state.persist()
-        agg = new_state.agg(
-            F.sum((F.col("cf") | F.col("cb")).cast("long")).alias("c")
-        ).collect()[0]
-        if is_cut_round:
-            # the materialized cut carries no lineage: every older state
-            # in the window is now unreachable from anything live
-            for p in pending:
-                release(p)
-            pending.clear()
-            release(state)
-        else:
-            # successor is persist-only — its recompute path still reads
-            # `state` (and transitively the window); defer the release
-            pending.append(state)
-        state = new_state
-        if not agg["c"]:
-            converged = True
-            break
-    if not converged:
-        for p in pending:
-            release(p)
-        release(state)
-        adj.unpersist()
+
+        def measure(held: DataFrame):
+            agg = held.agg(
+                F.sum((F.col("cf") | F.col("cb")).cast("long")).alias("c"),
+                F.count("*").alias("rows"),
+            ).collect()[0]
+            return agg["c"] or 0, agg["rows"]
+
+        return new_state, measure
+
+    # the windowed default amortizes the localCheckpoint partition copy
+    # over `cut_every` rounds (the A/B that set it is in BENCH/PLANS.md
+    # round 6); cut_every=1 cuts every round
+    result = iterate(state0, step, max_iter=max_iter, checkpoint_every=cut_every)
+    adj.unpersist()
+    if not result.converged:
+        release(result.state)
         raise RuntimeError(
             f"bidirectional min-label propagation did not reach fixpoint "
             f"in {max_iter} supersteps; raise max_iter"
         )
-    if pending:
-        # converged mid-window: the state is persist-only and its
-        # recompute lineage still reaches the window — hand the window to
-        # the caller's release(state) instead of paying an extra eager
-        # checkpoint job here (the caller derives an eager cut from this
-        # state before releasing it, per release()'s documented contract)
-        state._deferred = pending
-    adj.unpersist()
-    # the caller derives its (eagerly cut) result from this state, then
-    # must release(state) to free it and any deferred window behind it
-    return state
+    # sealed by iterate: the caller derives its result from this state,
+    # then must release() it
+    return result.state
 
 
 def strongly_connected_components(
@@ -478,17 +448,20 @@ def strongly_connected_components(
         labels = _bidirectional_min_labels(
             cur, remaining, max_iter, n_verts=n_left
         )
+        # lazy: the eager new_remaining cut below reads settled, and that
+        # job materializes settled's checkpoint too
         settled = cut_lineage(
             labels.filter(F.col("f") == F.col("b")).select(
                 "v", F.col("f").alias("component")
-            )
+            ),
+            eager=False,
         )
-        # settled is an EAGER cut — labels' checkpoint blocks (V rows per
-        # outer round) can be freed now instead of waiting for JVM GC
-        release(labels)
         results.append(settled)
         new_remaining = cut_lineage(remaining.join(settled, "v", "left_anti"))
-        release(remaining)  # eager cut above — predecessor unreachable
+        # both cuts are materialized: labels' checkpoint blocks (V rows
+        # per outer round) and the old remaining are unreachable
+        release(labels)
+        release(remaining)
         remaining = new_remaining
         n_left = remaining.count()
         done = settled.select("v")

@@ -20,7 +20,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..plans.superstep import cut_lineage, release, superstep_state_side
+from ..plans.superstep import (
+    cut_lineage,
+    iterate,
+    release,
+    superstep_state_side,
+)
 from .builders import canonical_undirected, symmetrized, vertices
 from .components import connected_components
 
@@ -127,7 +132,6 @@ def coreness(
     max_rounds: int = 10000,
     checkpointer=None,
     checkpoint_every: int = 5,
-    fold_dense: bool = True,
 ) -> DataFrame:
     """Exact core number per vertex via the h-index fixpoint iteration
     (Montresor, De Pellegrini, Miorandi, "Distributed k-Core
@@ -151,6 +155,9 @@ def coreness(
     the reference's decrement quirks corrected (pinned to its tests'
     expected values; parity with ``coreness_peel`` is property-tested).
 
+    Without a checkpointer every round is a lazy lineage cut, which the
+    aggregate that drives the density switch materializes.
+
     ``checkpointer`` (a ``plans.superstep.CheckpointManager``) makes the
     iteration resumable (north_rule): the (v, est, chg) state is durably
     written every ``checkpoint_every`` rounds with a metrics sidecar, and
@@ -158,10 +165,6 @@ def coreness(
     including after a ``max_rounds`` abort, whose partial state is saved
     before raising.
     """
-    import time as _time
-
-    from ..plans.superstep import SuperstepMetrics
-
     spark = edges.sparkSession
     sym = symmetrized(edges).repartition("src").persist()
     sym.count()
@@ -170,50 +173,33 @@ def coreness(
     if checkpointer is not None:
         found = checkpointer.load_latest(spark)
         if found is not None:
-            start_round, saved = found
+            start_round, state = found
             if start_round >= max_rounds:
                 raise ValueError(
                     f"checkpoint resumes at round {start_round}, already "
                     f"past max_rounds={max_rounds}; rerun with a larger "
                     "--max-iter (or clear the checkpoint dir to restart)"
                 )
-            state = cut_lineage(saved)
     if state is None:
-        state = cut_lineage(
-            _sym_degrees(sym).select(
-                "v", F.col("degree").alias("est"), F.lit(True).alias("chg")
-            )
+        state = _sym_degrees(sym).select(
+            "v", F.col("degree").alias("est"), F.lit(True).alias("chg")
         )
-
-    def _save(state_df, i, changed, seconds):
-        checkpointer.save(
-            state_df,
-            SuperstepMetrics(
-                superstep=i,
-                rows=state_df.count(),
-                delta=float(changed),
-                seconds=round(seconds, 4),
-                partitions=state_df.rdd.getNumPartitions(),
-            ),
-        )
-
     # density switch state: prev_changed / n_verts decides the per-round
     # message plan (None on round 1 / after a resume -> dense).  n_verts
-    # is known up front (one metadata-cheap count of the eager state
-    # leaf) so the state-side join strategy is right from round 1.
+    # is known up front (the count that materializes the persisted state)
+    # so the state-side join strategy is right from round 1.
+    state = state.persist()
     prev_changed: int | None = None
-    n_verts: int | None = state.count()
-    for i in range(start_round, max_rounds):
-        t0 = _time.time()
+    n_verts: int = state.count()
+    w = (
+        Window.partitionBy("v")
+        .orderBy(F.desc("nb"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+
+    def step(state: DataFrame, i: int):
         est = state.select("v", "est")
-        w = (
-            Window.partitionBy("v")
-            .orderBy(F.desc("nb"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        if fold_dense and (
-            prev_changed is None or prev_changed * 8 >= (n_verts or 0)
-        ):
+        if prev_changed is None or prev_changed * 8 >= n_verts:
             # DENSE round (>=1/8 of vertices changed, or unknown): one
             # sym⋈state join carrying the chg flag replaces the frontier
             # semi-join + candidate distinct + message semi-join — 2
@@ -289,32 +275,31 @@ def coreness(
                 ).alias("chg"),
             )
         )
-        new_state = cut_lineage(new_state, eager=False)
-        stats = new_state.agg(
-            F.sum(F.col("chg").cast("long")).alias("chg"),
-            F.count("*").alias("n"),
-        ).collect()[0]
-        changed = stats["chg"] or 0
-        prev_changed, n_verts = int(changed), int(stats["n"])
-        # the agg materialized new_state's checkpoint; the previous round's
-        # blocks are now dead — drop them instead of letting ~38 rounds of
-        # state accumulate on the heap
-        release(state)
-        state = new_state
-        if checkpointer is not None and (
-            (i + 1) % checkpoint_every == 0 or not changed
-        ):
-            _save(state, i + 1, changed, _time.time() - t0)
-        if not changed:
-            sym.unpersist()
-            return state.select("v", F.col("est").cast("int").alias("coreness"))
-    if checkpointer is not None and max_rounds % checkpoint_every != 0:
-        # durable partial state for the abort path: a rerun with a larger
-        # max_rounds resumes instead of restarting
-        _save(state, max_rounds, -1, 0.0)
+
+        def measure(held: DataFrame):
+            nonlocal prev_changed, n_verts
+            stats = held.agg(
+                F.sum(F.col("chg").cast("long")).alias("chg"),
+                F.count("*").alias("n"),
+            ).collect()[0]
+            prev_changed, n_verts = int(stats["chg"] or 0), int(stats["n"])
+            return prev_changed, n_verts
+
+        return new_state, measure
+
+    result = iterate(
+        state,
+        step,
+        max_iter=max_rounds,
+        checkpoint_every=checkpoint_every if checkpointer is not None else 1,
+        checkpointer=checkpointer,
+        start_iteration=start_round,
+    )
     sym.unpersist()
-    release(state)
-    raise RuntimeError("coreness h-index iteration did not converge")
+    if not result.converged:
+        release(result.state)
+        raise RuntimeError("coreness h-index iteration did not converge")
+    return result.state.select("v", F.col("est").cast("int").alias("coreness"))
 
 
 def coreness_peel(edges: DataFrame, max_rounds: int = 10000) -> DataFrame:
@@ -322,57 +307,18 @@ def coreness_peel(edges: DataFrame, max_rounds: int = 10000) -> DataFrame:
     at level k, cascade-remove everything with remaining degree <= k;
     removed vertices get coreness k.  Returns DataFrame[v, coreness].
 
-    Equivalent to Batagelj–Zaveršnik (coreness.rs:106-161) with the
-    reference's decrement quirks corrected (matches its tests' expected
-    values including the 'breaks the original algorithm' graph).
-    Prefer ``coreness`` (h-index fixpoint) at scale — this variant's
-    round count grows with the number of shell levels."""
-    spark = edges.sparkSession
-    sym = symmetrized(edges).persist()
-    sym.count()
-    # the remaining-vertex set is tracked explicitly: a vertex whose
-    # neighbors are all peeled in one round becomes isolated (degree 0)
-    # and must still be assigned the current shell value
-    remaining = cut_lineage(vertices(sym))
-    results = _PeelAccumulator()
-    k = 0
-    for _ in range(max_rounds):
-        deg = remaining.join(_sym_degrees(sym), "v", "left").select(
-            "v", F.coalesce("degree", F.lit(0)).alias("degree")
-        ).persist()
-        # single driver action per round: remaining-count + min-degree in
-        # one aggregate (at scale the per-round serial floor is the number
-        # of driver jobs, not the shuffled bytes)
-        agg = deg.agg(
-            F.count("*").alias("n"), F.min("degree").alias("min_deg")
-        ).collect()[0]
-        if agg["n"] == 0:
-            deg.unpersist()
-            break
-        k = max(k, int(agg["min_deg"]))
-        # the argmin vertex has degree == min_deg <= k, so the peel set is
-        # never empty — no separate count action needed
-        peel = cut_lineage(deg.filter(F.col("degree") <= k).select("v"))
-        deg.unpersist()
-        prev_remaining = remaining
-        remaining = cut_lineage(remaining.join(peel, "v", "left_anti"))
-        release(prev_remaining)
-        nxt = cut_lineage(
-            sym.join(peel.withColumnRenamed("v", "src"), "src", "left_anti")
-            .join(peel.withColumnRenamed("v", "dst"), "dst", "left_anti")
-            .select("src", "dst")
-            # lineage cut: see k_core_vertices
-        )
-        release(sym)
-        sym = nxt
-        # accumulate AFTER the anti-joins above materialized: a fold
-        # releases buffered peel cuts, so nothing may still need them
-        results.add(peel, k)
-    release(sym)
-    out = results.result()
-    if out is None:
-        return spark.createDataFrame([], "v long, coreness int")
-    return out
+    This is ``weighted_coreness``'s threshold peel on unit weights (the
+    remaining weight of a vertex is then its remaining degree, summed
+    exactly in floating point).  Equivalent to Batagelj–Zaveršnik
+    (coreness.rs:106-161) with the reference's decrement quirks corrected
+    (matches its tests' expected values including the 'breaks the
+    original algorithm' graph).  Prefer ``coreness`` (h-index fixpoint)
+    at scale — this variant's round count grows with the number of shell
+    levels."""
+    unit = canonical_undirected(edges).withColumn("weight", F.lit(1.0))
+    return weighted_coreness(unit, max_rounds).select(
+        "v", F.col("coreness").cast("int").alias("coreness")
+    )
 
 
 def weighted_coreness(
@@ -416,6 +362,9 @@ def weighted_coreness(
         )
     ).persist()
     sym.count()
+    # the remaining-vertex set is tracked explicitly: a vertex whose
+    # neighbors are all peeled in one round becomes isolated (weight 0)
+    # and must still be assigned the current shell value
     remaining = cut_lineage(vertices(sym.select("src", "dst")))
     results = _PeelAccumulator()
     shell = float("-inf")
@@ -426,7 +375,7 @@ def weighted_coreness(
         w = remaining.join(sums, "v", "left").select(
             "v", F.coalesce("w", F.lit(0.0)).alias("w")
         ).persist()
-        # one driver action per round (count + min folded; see coreness)
+        # one driver action per round: remaining-count + min folded
         agg = w.agg(F.count("*").alias("n"), F.min("w").alias("min_w")).collect()[0]
         if agg["n"] == 0:
             w.unpersist()
@@ -437,6 +386,8 @@ def weighted_coreness(
 
             min_w = math.ceil(min_w / quantize) * quantize
         shell = max(shell, min_w)
+        # the argmin vertex has w == min_w <= shell, so the peel set is
+        # never empty — no separate count action needed
         peel = cut_lineage(w.filter(F.col("w") <= shell).select("v"))
         w.unpersist()
         prev_remaining = remaining
@@ -566,6 +517,45 @@ def _edge_support_full(canon: DataFrame) -> DataFrame:
     return out
 
 
+def _decrement_support(
+    state: DataFrame, drop: DataFrame, surviving: DataFrame
+) -> DataFrame:
+    """Sparse round of the truss peels (``k_truss_edges``, ``trussness``):
+    ``surviving`` — the (src, dst, support) ``state`` minus this round's
+    ``drop`` edges — with each support decremented by the affected
+    triangles it loses.  Returns the lineage-cut successor state."""
+    sym_e = state.select("src", "dst").union(
+        state.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+    # affected triangles: for dropped edge (u, w), every common neighbor a
+    # with (u,a) and (w,a) still in the current edge set
+    d = drop.select(F.col("src").alias("u"), F.col("dst").alias("w"))
+    e_u = sym_e.select(F.col("src").alias("u"), F.col("dst").alias("a"))
+    e_w = sym_e.select(F.col("src").alias("w"), F.col("dst").alias("a"))
+    tri = d.join(e_u, "u").join(e_w, ["w", "a"])
+    srt = F.array_sort(F.array("u", "w", "a"))
+    tri3 = tri.select(
+        srt.getItem(0).alias("x"),
+        srt.getItem(1).alias("y"),
+        srt.getItem(2).alias("z"),
+    ).distinct()
+    dec_edges = (
+        tri3.select(F.col("x").alias("src"), F.col("y").alias("dst"))
+        .union(tri3.select(F.col("x").alias("src"), F.col("z").alias("dst")))
+        .union(tri3.select(F.col("y").alias("src"), F.col("z").alias("dst")))
+    )
+    dec = dec_edges.groupBy("src", "dst").agg(F.count("*").alias("dec"))
+    # the stats-resetting cut is ESSENTIAL for this inner-join loop (see
+    # plans.superstep.cut_lineage)
+    return cut_lineage(
+        surviving.join(dec, ["src", "dst"], "left").select(
+            "src",
+            "dst",
+            (F.col("support") - F.coalesce("dec", F.lit(0))).alias("support"),
+        )
+    )
+
+
 def k_truss_edges(edges: DataFrame, k: int, max_rounds: int = 1000) -> DataFrame:
     """Edges of the k-truss: iteratively delete canonical edges supported by
     fewer than k-2 triangles.  Returns DataFrame[src, dst].
@@ -638,54 +628,7 @@ def k_truss_edges(edges: DataFrame, k: int, max_rounds: int = 1000) -> DataFrame
             new_state = _edge_support_full(surv_edges)
             release(surv_edges)
         else:
-            sym_e = state.select("src", "dst").union(
-                state.select(
-                    F.col("dst").alias("src"), F.col("src").alias("dst")
-                )
-            )
-            # affected triangles: for dropped edge (u, w), every common
-            # neighbor a with (u,a) and (w,a) still in the current edge set
-            d = drop.select(F.col("src").alias("u"), F.col("dst").alias("w"))
-            e_u = sym_e.select(
-                F.col("src").alias("u"), F.col("dst").alias("a")
-            )
-            e_w = sym_e.select(
-                F.col("src").alias("w"), F.col("dst").alias("a")
-            )
-            tri = d.join(e_u, "u").join(e_w, ["w", "a"])
-            srt = F.array_sort(F.array("u", "w", "a"))
-            tri3 = tri.select(
-                srt.getItem(0).alias("x"),
-                srt.getItem(1).alias("y"),
-                srt.getItem(2).alias("z"),
-            ).distinct()
-            dec_edges = (
-                tri3.select(F.col("x").alias("src"), F.col("y").alias("dst"))
-                .union(
-                    tri3.select(
-                        F.col("x").alias("src"), F.col("z").alias("dst")
-                    )
-                )
-                .union(
-                    tri3.select(
-                        F.col("y").alias("src"), F.col("z").alias("dst")
-                    )
-                )
-            )
-            dec = dec_edges.groupBy("src", "dst").agg(
-                F.count("*").alias("dec")
-            )
-            # the stats-resetting cut is ESSENTIAL for this inner-join
-            # loop (see plans.superstep.cut_lineage)
-            new_state = cut_lineage(
-                surviving.join(dec, ["src", "dst"], "left").select(
-                    "src",
-                    "dst",
-                    (F.col("support") - F.coalesce("dec", F.lit(0))).alias(
-                        "support"
-                    ),
-                )
-            )
+            new_state = _decrement_support(state, drop, surviving)
         release(state)
         state = new_state
         # dense rounds may shed triangle-free survivors too (they are
@@ -772,36 +715,7 @@ def trussness(edges: DataFrame, max_rounds: int = 10000) -> DataFrame:
             labeled.append(shed)
             release(surv_edges)
         else:
-            sym_e = state.select("src", "dst").union(
-                state.select(
-                    F.col("dst").alias("src"), F.col("src").alias("dst")
-                )
-            )
-            d = drop.select(F.col("src").alias("u"), F.col("dst").alias("w"))
-            e_u = sym_e.select(F.col("src").alias("u"), F.col("dst").alias("a"))
-            e_w = sym_e.select(F.col("src").alias("w"), F.col("dst").alias("a"))
-            tri = d.join(e_u, "u").join(e_w, ["w", "a"])
-            srt = F.array_sort(F.array("u", "w", "a"))
-            tri3 = tri.select(
-                srt.getItem(0).alias("x"),
-                srt.getItem(1).alias("y"),
-                srt.getItem(2).alias("z"),
-            ).distinct()
-            dec_edges = (
-                tri3.select(F.col("x").alias("src"), F.col("y").alias("dst"))
-                .union(tri3.select(F.col("x").alias("src"), F.col("z").alias("dst")))
-                .union(tri3.select(F.col("y").alias("src"), F.col("z").alias("dst")))
-            )
-            dec = dec_edges.groupBy("src", "dst").agg(F.count("*").alias("dec"))
-            new_state = cut_lineage(
-                surviving.join(dec, ["src", "dst"], "left").select(
-                    "src",
-                    "dst",
-                    (F.col("support") - F.coalesce("dec", F.lit(0))).alias(
-                        "support"
-                    ),
-                )
-            )
+            new_state = _decrement_support(state, drop, surviving)
         release(state)
         state = new_state
         n_edges = state.count() if n_drop * 4 > n_surv else n_surv

@@ -56,14 +56,18 @@ def label_propagation(
         new_state = prev.join(new_labels, "v", "left").select(
             "v", F.coalesce(F.col("label"), F.col("old_label")).alias("label"),
             (F.coalesce(F.col("label"), F.col("old_label")) != F.col("old_label")).alias("_chg"),
-        ).persist()
-        # single action: (changed, rows) in one aggregate; _chg stays in the
-        # state so the persisted DataFrame is the one the loop manages
-        agg = new_state.agg(
-            F.sum(F.col("_chg").cast("long")).alias("changed"),
-            F.count("*").alias("rows"),
-        ).collect()[0]
-        return new_state, float(agg["changed"]), int(agg["rows"])
+        )
+
+        def measure(held: DataFrame):
+            # single action: (changed, rows) in one aggregate; _chg stays in
+            # the state so the held DataFrame is the one the loop manages
+            agg = held.agg(
+                F.sum(F.col("_chg").cast("long")).alias("changed"),
+                F.count("*").alias("rows"),
+            ).collect()[0]
+            return float(agg["changed"]), int(agg["rows"])
+
+        return new_state, measure
 
     result = iterate(
         state0, step, max_iter=max_iter, tol=0.0, checkpointer=checkpointer

@@ -254,15 +254,18 @@ def pagerank(
                 F.abs(F.col("rank") - F.col("rank0")).alias("delta"),
                 "dangling",
             )
-            .persist()
         )
-        agg = new_state.agg(
-            F.sum("delta").alias("l1"),
-            F.sum(F.when(F.col("dangling"), F.col("rank"))).alias("dmass"),
-            F.count("*").alias("rows"),
-        ).collect()[0]
-        carried["dangling_mass"] = agg["dmass"] or 0.0
-        return new_state, float(agg["l1"]), int(agg["rows"])
+
+        def measure(held: DataFrame):
+            agg = held.agg(
+                F.sum("delta").alias("l1"),
+                F.sum(F.when(F.col("dangling"), F.col("rank"))).alias("dmass"),
+                F.count("*").alias("rows"),
+            ).collect()[0]
+            carried["dangling_mass"] = agg["dmass"] or 0.0
+            return float(agg["l1"]), int(agg["rows"])
+
+        return new_state, measure
 
     import math as _math
 

@@ -1,22 +1,26 @@
 """Superstep driver loop with lineage control, per-superstep checkpoints,
 and metrics — the iterative backbone under PageRank / connected components /
-label propagation / peeling.
+label propagation / eigenvector centrality / coreness / SCC labels.
 
 Spark has no native iterate-to-fixpoint, so iterative algorithms are driver
 loops where every iteration appends to the logical plan.  Unchecked, plan
 depth grows linearly and job setup cost dominates by iteration ~20 (and at
-cluster scale a lost executor replays the whole lineage).  The loop
-therefore:
+cluster scale a lost executor replays the whole lineage).  ``iterate``
+therefore owns, in one place:
 
-* truncates lineage every ``checkpoint_every`` supersteps — either via
-  durable parquet checkpoints (resumable across driver restarts; the
-  north-rule requirement) or ``localCheckpoint`` (fast, in-cluster),
-* records a metrics row per superstep (rows, delta, wall seconds,
-  partition count) next to the checkpoint so a resumed job knows exactly
-  where it stopped (per-partition lineage lives in the parquet footer +
-  metrics row),
-* supports resume: ``run`` starts from the latest durable checkpoint when
-  one exists for this job name.
+* how each round's state is held.  A *seal* round (every
+  ``checkpoint_every``-th, the last allowed one, and the converged one)
+  leaves a lineage-free state: a lazy ``cut_lineage`` that the round's own
+  aggregate materializes, or — with a ``CheckpointManager`` — a durable
+  parquet save that is read back (resumable across driver restarts; the
+  north-rule requirement).  Rounds in between are ``persist()``ed;
+* the deferred-release window: a persisted round still lineage-depends on
+  its predecessors, so superseded states are released only once a sealed
+  successor has materialized on top of them (``release``'s invariant);
+* one metrics row per superstep (rows, delta, wall seconds, partition
+  count), stored next to each durable checkpoint so a resumed job (the
+  caller's ``load_latest`` round passed as ``start_iteration``) knows
+  exactly where it stopped.
 
 The reference engine has no equivalent (single-process loops,
 transformer_base.rs:38-91); this is engine-side machinery our Spark design
@@ -68,8 +72,10 @@ def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
         # handle to the checkpointed RDD so release() can drop its storage
         # blocks deterministically (they otherwise live until the JVM
         # ContextCleaner happens to GC the reference — which accumulates
-        # driver/executor heap across a long peel cascade)
-        out._cut_rdd = jrdd
+        # driver/executor heap across a long peel cascade).  It is the
+        # LogicalRDD's own RDD: ``jrdd`` is a projection on top of it and
+        # holds no blocks.
+        out._cut_rdd = jdf.logicalPlan().rdd()
         return out
     except Exception:  # pragma: no cover - internal API moved/renamed
         return cut
@@ -134,12 +140,6 @@ def release(df: DataFrame | None) -> None:
         df.unpersist()
     except Exception:  # pragma: no cover
         pass
-    # a producer may hand over predecessors whose blocks its OWN lineage
-    # still needed (deferred-release window, e.g. a persist-only state
-    # returned mid-window): once the caller releases the product, the
-    # window is unreachable too
-    for dep in getattr(df, "_deferred", ()):  # pragma: no branch
-        release(dep)
 
 
 @dataclass
@@ -149,9 +149,6 @@ class SuperstepMetrics:
     delta: float
     seconds: float
     partitions: int
-
-    def to_json(self) -> str:
-        return json.dumps(self.__dict__)
 
 
 @dataclass
@@ -188,7 +185,7 @@ class CheckpointManager:
     def save(self, df: DataFrame, metrics: SuperstepMetrics) -> DataFrame:
         path = self._step_path(metrics.superstep)
         df.write.mode("overwrite").parquet(path)
-        payload = json.loads(metrics.to_json())
+        payload = dict(metrics.__dict__)
         if self.fingerprint is not None:
             payload["fingerprint"] = self.fingerprint
         with open(path + ".metrics.json", "w") as f:
@@ -228,21 +225,30 @@ class CheckpointManager:
 
 def iterate(
     state: DataFrame,
-    step: Callable[[DataFrame, int], tuple[DataFrame, float]],
+    step: Callable[[DataFrame, int], tuple[DataFrame, Callable]],
     max_iter: int,
     tol: float = 0.0,
     checkpoint_every: int = 3,
     checkpointer: CheckpointManager | None = None,
     start_iteration: int = 0,
 ) -> SuperstepResult:
-    """Run ``step(state, i) -> (new_state, delta[, rows])`` until
-    ``delta <= tol`` or ``max_iter``.  ``delta`` is the algorithm's
-    convergence measure (L1 score change, #changed labels, #removed
-    vertices...).  A step that already materialized its state may return
-    ``rows`` as a third element to avoid a redundant count action — at
-    cluster scale, extra per-superstep jobs are pure fixed overhead.
+    """Run ``step(state, i) -> (new_state, measure)`` until ``delta <= tol``
+    or ``max_iter``.
 
-    The returned state is persisted; callers unpersist when done.
+    ``new_state`` is lazy; the loop decides how to hold it (see the module
+    docstring) and then calls ``measure(held) -> (delta, rows)``, which
+    runs the round's single aggregate over the held state — on a
+    non-durable seal round that same job also materializes the lineage
+    cut.  ``delta`` is the algorithm's convergence measure (L1 score
+    change, #changed labels...).  Anything else the next round needs
+    from the aggregate (a carried scalar, a density switch) the step
+    stashes in its own closure from inside ``measure``.
+
+    Ownership: ``iterate`` takes ``state`` (persisting it unless the
+    caller already did) and releases every superseded state itself.  The
+    returned ``result.state`` is always sealed — a cut leaf, or the
+    durable reread when a checkpointer is given — so the caller frees it
+    with one ``release(result.state)`` once nothing reads it any more.
     """
     if start_iteration > 0 and start_iteration >= max_iter:
         # a resumed checkpoint already at/past the iteration bound would
@@ -253,53 +259,47 @@ def iterate(
             f"past max_iter={max_iter}; rerun with a larger --max-iter "
             "(or clear the checkpoint dir to restart from scratch)"
         )
-    state = state.persist()
-    state.count()
+    if not state.is_cached:
+        # materialized by round 1's job: a separate count would be one
+        # more driver job for nothing
+        state = state.persist()
     metrics: list[SuperstepMetrics] = []
-    # deferred-release window (same discipline as the SCC inner loop): a
-    # persist-only round's recompute lineage still reads its predecessors,
-    # so superseded states are freed only once a lineage-FREE successor —
-    # a cut_lineage leaf or a durable parquet reread — has materialized on
-    # top of them.  This replaces the old unpersist-immediately pattern,
-    # whose cut-leaf blocks were freed only when the JVM ContextCleaner
-    # happened to GC them (measured: driver heap accumulation across a
-    # 55-query gate run forced clearCache+gc between queries).
+    # deferred-release window: states superseded by persist-only rounds.
+    # A persisted successor's recompute lineage still reads them, so they
+    # are freed only once a sealed successor has materialized on top of
+    # them (release()'s executor-loss invariant).
     pending: list[DataFrame] = []
     converged = False
     i = start_iteration
     while i < max_iter:
         t0 = time.time()
-        out = step(state, i)
-        if len(out) == 3:
-            new_state, delta, rows = out
-            new_state = new_state.persist()
-        else:
-            new_state, delta = out
-            new_state = new_state.persist()
-            rows = new_state.count()
-        seconds = time.time() - t0
+        new_state, measure = step(state, i)
         i += 1
+        sealed = i % checkpoint_every == 0 or i == max_iter
+        if sealed and checkpointer is None:
+            # lazy cut: measure's aggregate materializes the checkpoint in
+            # the same job — one action for the whole round
+            new_state = cut_lineage(new_state, eager=False)
+        else:
+            new_state = new_state.persist()
+        delta, rows = measure(new_state)
+        converged = delta <= tol
         m = SuperstepMetrics(
             superstep=i,
-            rows=rows,
+            rows=int(rows),
             delta=float(delta),
-            seconds=round(seconds, 4),
+            seconds=round(time.time() - t0, 4),
             partitions=new_state.rdd.getNumPartitions(),
         )
         metrics.append(m)
-        sealed = False
-        if checkpointer is not None and (
-            i % checkpoint_every == 0 or delta <= tol or i == max_iter
-        ):
+        if checkpointer is not None and (sealed or converged):
             reread = checkpointer.save(new_state, m)
             new_state.unpersist()
             new_state = reread.persist()
             new_state.count()
             sealed = True  # parquet reread carries no lineage
-        elif i % checkpoint_every == 0 or delta <= tol or i == max_iter:
-            # lineage cut without durability (stats reset included); also
-            # seals the final round so the returned state never drags a
-            # window of superseded predecessors behind it
+        elif converged and not sealed:
+            # seal the final state so the caller never inherits the window
             cut = cut_lineage(new_state)
             new_state.unpersist()
             new_state = cut
@@ -314,8 +314,7 @@ def iterate(
         else:
             pending.append(state)
         state = new_state
-        if delta <= tol:
-            converged = True
+        if converged:
             break
     return SuperstepResult(
         state=state, iterations=i, converged=converged, metrics=metrics

