@@ -76,18 +76,19 @@ def eigenvector_centrality(
             )
         )
 
-        def measure(held: DataFrame):
-            agg = held.agg(
-                F.max("y").alias("m"),
-                F.sum("d").alias("l1"),
-                F.count("*").alias("rows"),
-            ).collect()[0]
-            scale["m"] = float(agg["m"])
+        def measure(row):
+            scale["m"] = float(row["m"])
             # first superstep has no previous change to report
-            delta = float("inf") if i == 0 else float(agg["l1"])
-            return delta, int(agg["rows"])
+            delta = float("inf") if i == 0 else float(row["l1"])
+            return delta, int(row["rows"])
 
-        return new_state, measure
+        return new_state, aggs, measure
+
+    aggs = [
+        F.max("y").alias("m"),
+        F.sum("d").alias("l1"),
+        F.count("*").alias("rows"),
+    ]
 
     result = iterate(state0, step, max_iter=max_iter, tol=eps)
     if result.converged:

@@ -84,15 +84,15 @@ def connected_components(
             )
         )
 
-        def measure(held: DataFrame):
-            # single action per superstep: materialize + (changed, rows)
-            agg = held.agg(
-                F.sum(F.col("active").cast("long")).alias("changed"),
-                F.count("*").alias("rows"),
-            ).collect()[0]
-            return float(agg["changed"] or 0), int(agg["rows"])
+        return new_state, aggs, measure
 
-        return new_state, measure
+    aggs = [
+        F.sum(F.col("active").cast("long")).alias("changed"),
+        F.count("*").alias("rows"),
+    ]
+
+    def measure(row):
+        return float(row["changed"] or 0), int(row["rows"])
 
     result = iterate(
         state0,
@@ -321,14 +321,15 @@ def _bidirectional_min_labels(
             (F.coalesce("bc", F.col("b")) < F.col("b")).alias("cb"),
         )
 
-        def measure(held: DataFrame):
-            agg = held.agg(
-                F.sum((F.col("cf") | F.col("cb")).cast("long")).alias("c"),
-                F.count("*").alias("rows"),
-            ).collect()[0]
-            return agg["c"] or 0, agg["rows"]
+        return new_state, aggs, measure
 
-        return new_state, measure
+    aggs = [
+        F.sum((F.col("cf") | F.col("cb")).cast("long")).alias("c"),
+        F.count("*").alias("rows"),
+    ]
+
+    def measure(row):
+        return row["c"] or 0, row["rows"]
 
     # the windowed default amortizes the localCheckpoint partition copy
     # over `cut_every` rounds (the A/B that set it is in BENCH/PLANS.md

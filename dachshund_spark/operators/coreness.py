@@ -276,16 +276,17 @@ def coreness(
             )
         )
 
-        def measure(held: DataFrame):
-            nonlocal prev_changed, n_verts
-            stats = held.agg(
-                F.sum(F.col("chg").cast("long")).alias("chg"),
-                F.count("*").alias("n"),
-            ).collect()[0]
-            prev_changed, n_verts = int(stats["chg"] or 0), int(stats["n"])
-            return prev_changed, n_verts
+        return new_state, aggs, measure
 
-        return new_state, measure
+    aggs = [
+        F.sum(F.col("chg").cast("long")).alias("chg"),
+        F.count("*").alias("n"),
+    ]
+
+    def measure(row):
+        nonlocal prev_changed, n_verts
+        prev_changed, n_verts = int(row["chg"] or 0), int(row["n"])
+        return prev_changed, n_verts
 
     result = iterate(
         state,

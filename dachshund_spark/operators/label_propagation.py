@@ -58,16 +58,17 @@ def label_propagation(
             (F.coalesce(F.col("label"), F.col("old_label")) != F.col("old_label")).alias("_chg"),
         )
 
-        def measure(held: DataFrame):
-            # single action: (changed, rows) in one aggregate; _chg stays in
-            # the state so the held DataFrame is the one the loop manages
-            agg = held.agg(
-                F.sum(F.col("_chg").cast("long")).alias("changed"),
-                F.count("*").alias("rows"),
-            ).collect()[0]
-            return float(agg["changed"]), int(agg["rows"])
+        return new_state, aggs, measure
 
-        return new_state, measure
+    # (changed, rows) in the round's one aggregate; _chg stays in the
+    # state so the aggregate reads the frame the loop holds
+    aggs = [
+        F.sum(F.col("_chg").cast("long")).alias("changed"),
+        F.count("*").alias("rows"),
+    ]
+
+    def measure(row):
+        return float(row["changed"]), int(row["rows"])
 
     result = iterate(
         state0, step, max_iter=max_iter, tol=0.0, checkpointer=checkpointer

@@ -14,6 +14,12 @@ Physical design:
 * The ``links`` table (edge + precomputed 1/out_degree weight) is
   repartitioned on ``src`` and persisted once; every superstep shuffles
   only the rank vector.
+* The held state is the join anchor: a superstep is ``links ⋈ ranks →
+  groupBy(dst) → state ⋈ sums``, and the new rank, its delta against
+  the held rank and the carried per-vertex attributes come out of that
+  last join's one projection.  With a checkpointer the held state is
+  the previous step's parquet, read lazily, and the checkpoint write is
+  the superstep's only job (``plans.superstep``).
 * Two aggregation strategies, selectable per call:
   - ``impl="sql"``: ``links ⋈ ranks → groupBy(dst).sum`` — Catalyst gives
     map-side partial aggregation; AQE splits skewed reducers.
@@ -90,8 +96,8 @@ def pagerank(
     vector becomes p(v) = 1/|seeds| on seeds, 0 elsewhere: ranks start at
     p, the (1-d) restart and the dangling redistribution both flow to p
     instead of uniform 1/n.  Plan shape is unchanged — p rides in the
-    cached ``static`` table the per-superstep left join already touches,
-    so personalization costs zero extra shuffles per superstep.
+    held state the per-superstep left join already anchors on, so
+    personalization costs zero extra shuffles per superstep.
 
     ``weight_col``: optional edge-weight column for WEIGHTED PageRank —
     each edge carries weight/Σ(out-weights of src) instead of
@@ -143,8 +149,11 @@ def pagerank(
     )
     links.count()
 
-    # state: (v, rank, delta, dangling); the dangling flag makes the next
-    # superstep's dangling mass a by-product of this superstep's aggregate
+    # state: (v, rank, delta, dangling[, p]); the dangling flag makes the
+    # next superstep's dangling mass a by-product of this superstep's
+    # aggregate, and the held state is each superstep's join anchor, so
+    # it carries every per-vertex attribute a superstep reads
+    attrs = ["dangling"] if pvec is None else ["dangling", "p"]
     start_iteration = 0
     state0 = None
     if checkpointer is not None:
@@ -164,10 +173,10 @@ def pagerank(
             (F.lit(1.0 / n) if pvec is None else F.col("p")).alias("rank"),
             F.lit(1.0).alias("delta"),
             F.col("nd").isNull().alias("dangling"),
+            *attrs[1:],
         )
     state0 = state0.persist()
     # one setup aggregate: dangling mass AND the dangling-existence flag
-    # (formerly a separate limit(1).count() against the static cache)
     row0 = state0.agg(
         F.sum(F.when(F.col("dangling"), F.col("rank"))).alias("dm"),
         F.max(F.col("dangling").cast("int")).alias("hd"),
@@ -184,11 +193,15 @@ def pagerank(
         join_strategy == "auto" and n > 100_000
     )
 
-    def _one_superstep(cur: DataFrame, dangling_mass_col):
-        """One lazy superstep: cur(v, rank) -> (v, rank).  The full-vertex
-        left join goes against the *cached* static table, so the previous
-        lazy state is referenced exactly once (via the contribution sum) —
-        the property that keeps chained blocks linear."""
+    def _one_superstep(state: DataFrame, cur: DataFrame, dangling_mass_col):
+        """One lazy superstep: cur(v, rank) -> state-shaped (v, rank, delta,
+        dangling[, p]), delta measured against the held ``state``.  The
+        new mass is left-joined onto ``state`` (a materialized leaf: the
+        parquet reread, a cut or a persisted frame), never onto ``cur``,
+        so the previous lazy sub-iteration is referenced exactly once
+        (via the contribution sum) — the property that keeps chained
+        blocks linear; a second reference would double the uncached plan
+        per step (measured as 2^k blow-up)."""
         ranks = cur.select("v", "rank")
         if use_shuffle_hash:
             ranks = ranks.hint("shuffle_hash")
@@ -207,65 +220,45 @@ def pagerank(
                 F.lit((1.0 - damping) / n)
                 + F.lit(damping / n) * dangling_mass_col
             )
-            sv = static.select("v")
         else:
             # restart and dangling mass both flow to the teleport vector
             base = (
                 F.lit(1.0 - damping) * F.col("p")
                 + F.lit(damping) * dangling_mass_col * F.col("p")
             )
-            sv = static.select("v", "p")
         new_rank = base + F.lit(damping) * F.coalesce(F.col("mass"), F.lit(0.0))
-        return sv.join(sums, sv.v == sums.dst, "left").select(
-            "v", new_rank.alias("rank")
+        return state.join(sums, state.v == sums.dst, "left").select(
+            "v",
+            new_rank.alias("rank"),
+            F.abs(new_rank - F.col("rank")).alias("delta"),
+            *attrs,
         )
 
-    # static per-vertex attributes, cached once — the anchor that keeps a
-    # chained block LINEAR: every lazy sub-iteration joins the new mass
-    # against this cached table (never against the previous lazy state, a
-    # second reference to which would double the uncached plan per step —
-    # measured as 2^k blow-up)
-    static = state0.select("v", "dangling")
-    if pvec is not None:
-        static = static.join(pvec, "v")
-    static = static.repartition("v").persist()
-    # (hash-partitioned on v so the per-sub-iteration full-vertex left join
-    # reuses the cached layout instead of re-exchanging every superstep;
-    # the cache materializes with the first superstep's join)
     effective_block = block_size if not has_dangling else 1
     # with dangling vertices the per-step mass depends on the previous
     # state twice (contributions + dangling sum), which cannot be chained
     # lazily without recomputation; fall back to one action per superstep
 
+    aggs = [
+        F.sum("delta").alias("l1"),
+        F.sum(F.when(F.col("dangling"), F.col("rank"))).alias("dmass"),
+        F.count("*").alias("rows"),
+    ]
+
+    def measure(row):
+        carried["dangling_mass"] = row["dmass"] or 0.0
+        return float(row["l1"]), int(row["rows"])
+
     def step(state: DataFrame, i: int):
-        cur = state.select("v", "rank")
+        cur = state
         for j in range(effective_block):
             dmass = F.lit(carried["dangling_mass"]) if j == 0 else F.lit(0.0)
             # (dangling graphs have effective_block == 1, so the literal
             # carried mass is always current)
-            cur = _one_superstep(cur, dmass)
-        block_start = state.select("v", F.col("rank").alias("rank0"))
-        new_state = (
-            cur.join(block_start, "v")
-            .join(static, "v")
-            .select(
-                "v",
-                "rank",
-                F.abs(F.col("rank") - F.col("rank0")).alias("delta"),
-                "dangling",
-            )
-        )
-
-        def measure(held: DataFrame):
-            agg = held.agg(
-                F.sum("delta").alias("l1"),
-                F.sum(F.when(F.col("dangling"), F.col("rank"))).alias("dmass"),
-                F.count("*").alias("rows"),
-            ).collect()[0]
-            carried["dangling_mass"] = agg["dmass"] or 0.0
-            return float(agg["l1"]), int(agg["rows"])
-
-        return new_state, measure
+            cur = _one_superstep(state, cur, dmass)
+        # the last sub-iteration's delta is the L1 distance across the
+        # whole block
+        return cur, aggs, measure
 
     import math as _math
 
@@ -282,7 +275,6 @@ def pagerank(
     out = result.state.select("v", F.col("rank").alias("pagerank"))
     links.unpersist()
     verts.unpersist()
-    static.unpersist()
     if include_metrics:
         return out, result
     return out

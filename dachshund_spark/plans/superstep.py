@@ -8,12 +8,27 @@ depth grows linearly and job setup cost dominates by iteration ~20 (and at
 cluster scale a lost executor replays the whole lineage).  ``iterate``
 therefore owns, in one place:
 
-* how each round's state is held.  A *seal* round (every
-  ``checkpoint_every``-th, the last allowed one, and the converged one)
-  leaves a lineage-free state: a lazy ``cut_lineage`` that the round's own
-  aggregate materializes, or — with a ``CheckpointManager`` — a durable
-  parquet save that is read back (resumable across driver restarts; the
-  north-rule requirement).  Rounds in between are ``persist()``ed;
+* ONE Spark action per round.  A step hands back its lazy state plus the
+  round's aggregate columns, and the loop picks the action that both
+  holds the state and computes the aggregate:
+
+  - a *seal* round (every ``checkpoint_every``-th, the last allowed one)
+    without a checkpointer is a lazy ``cut_lineage`` that the aggregate
+    materializes;
+  - a seal round WITH a ``CheckpointManager`` is durable: the parquet
+    write of ``state.observe(Observation(), *aggs)`` is the round's only
+    job, and the next state is that step's parquet read back lazily
+    (explicit schema: no inference job, no persist, no count);
+  - rounds in between are ``persist()``ed and aggregated.
+
+  A convergence between seals is sealed after the fact by an eager cut,
+  or a full durable save.
+* the commit protocol, after Delta Lake's (data first, then the commit
+  record): a durable round writes the parquet, reads the observation,
+  and only then writes the step's metrics sidecar, the marker resume
+  trusts.  A kill in between leaves an uncommitted step that ``latest``
+  skips.  Because a durable state reads its step's files lazily, a step
+  directory must outlive the next durable write.
 * the deferred-release window: a persisted round still lineage-depends on
   its predecessors, so superseded states are released only once a sealed
   successor has materialized on top of them (``release``'s invariant);
@@ -36,7 +51,7 @@ import time
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 
 
 def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
@@ -144,11 +159,16 @@ def release(df: DataFrame | None) -> None:
 
 @dataclass
 class SuperstepMetrics:
+    """One round's record.  ``seconds`` is the round's wall time, the
+    checkpoint write included on durable rounds.  A record carrying only
+    ``superstep`` is a durable round whose numbers are not read yet:
+    ``CheckpointManager.save`` writes its data but not its commit."""
+
     superstep: int
-    rows: int
-    delta: float
-    seconds: float
-    partitions: int
+    rows: int | None = None
+    delta: float | None = None
+    seconds: float | None = None
+    partitions: int | None = None
 
 
 @dataclass
@@ -163,9 +183,16 @@ class CheckpointManager:
     """Durable parquet checkpoints for vertex-state DataFrames.
 
     Layout: ``<root>/<name>/step=<k>/`` (parquet) plus
-    ``<root>/<name>/step=<k>.metrics.json``.  A checkpoint is only
-    considered complete when the metrics sidecar exists (written after the
-    parquet commit), so a killed job can never resume from a torn write.
+    ``<root>/<name>/step=<k>.metrics.json``, the step's commit record.
+    The data is written first and the sidecar after it (``commit``); a
+    step without its sidecar is torn and ``latest`` never resumes from
+    it.  ``save(df, m)`` with a complete ``m`` does both; ``iterate``
+    saves with ``SuperstepMetrics(superstep=k)`` so that the write also
+    computes the round's aggregate, and commits once it has read it.
+
+    The frame ``save`` returns reads the step's files lazily, so a step
+    directory must outlive every state derived from it — in ``iterate``,
+    until the next durable write.
     """
 
     def __init__(self, root: str, name: str, fingerprint: str | None = None):
@@ -183,14 +210,26 @@ class CheckpointManager:
         return os.path.join(self.dir, f"step={step}")
 
     def save(self, df: DataFrame, metrics: SuperstepMetrics) -> DataFrame:
+        """Write ``df`` as step ``metrics.superstep`` and return the lazy
+        reread (explicit schema: no inference job).  Commits only when
+        ``metrics`` carries the round's numbers."""
         path = self._step_path(metrics.superstep)
+        if os.path.exists(path + ".metrics.json"):
+            # a rewritten step is uncommitted until its new record lands
+            os.remove(path + ".metrics.json")
         df.write.mode("overwrite").parquet(path)
+        if metrics.rows is not None:
+            self.commit(metrics)
+        return df.sparkSession.read.schema(df.schema).parquet(path)
+
+    def commit(self, metrics: SuperstepMetrics) -> None:
+        """Write step ``metrics.superstep``'s record: the step becomes
+        resumable."""
         payload = dict(metrics.__dict__)
         if self.fingerprint is not None:
             payload["fingerprint"] = self.fingerprint
-        with open(path + ".metrics.json", "w") as f:
+        with open(self._step_path(metrics.superstep) + ".metrics.json", "w") as f:
             f.write(json.dumps(payload))
-        return df.sparkSession.read.parquet(path)
 
     def latest(self) -> tuple[int, str] | None:
         steps = []
@@ -225,30 +264,31 @@ class CheckpointManager:
 
 def iterate(
     state: DataFrame,
-    step: Callable[[DataFrame, int], tuple[DataFrame, Callable]],
+    step: Callable[[DataFrame, int], tuple[DataFrame, list[Column], Callable]],
     max_iter: int,
     tol: float = 0.0,
     checkpoint_every: int = 3,
     checkpointer: CheckpointManager | None = None,
     start_iteration: int = 0,
 ) -> SuperstepResult:
-    """Run ``step(state, i) -> (new_state, measure)`` until ``delta <= tol``
-    or ``max_iter``.
+    """Run ``step(state, i) -> (new_state, aggs, measure)`` until
+    ``delta <= tol`` or ``max_iter``.
 
-    ``new_state`` is lazy; the loop decides how to hold it (see the module
-    docstring) and then calls ``measure(held) -> (delta, rows)``, which
-    runs the round's single aggregate over the held state — on a
-    non-durable seal round that same job also materializes the lineage
-    cut.  ``delta`` is the algorithm's convergence measure (L1 score
+    ``new_state`` is lazy and ``aggs`` is the round's list of named
+    aggregate columns over it.  The loop holds the state (see the module
+    docstring) in the same Spark action that computes ``aggs``, then
+    calls ``measure(row) -> (delta, rows)`` on the resulting row (a
+    ``Row``, or the observation's dict on a durable round; index it by
+    name).  ``delta`` is the algorithm's convergence measure (L1 score
     change, #changed labels...).  Anything else the next round needs
-    from the aggregate (a carried scalar, a density switch) the step
-    stashes in its own closure from inside ``measure``.
+    from the row (a carried scalar, a density switch) the step stashes
+    in its own closure from inside ``measure``.
 
     Ownership: ``iterate`` takes ``state`` (persisting it unless the
     caller already did) and releases every superseded state itself.  The
-    returned ``result.state`` is always sealed — a cut leaf, or the
-    durable reread when a checkpointer is given — so the caller frees it
-    with one ``release(result.state)`` once nothing reads it any more.
+    returned ``result.state`` is always sealed — a cut leaf, or the lazy
+    parquet reread of the last durable step — so the caller frees it with
+    one ``release(result.state)`` once nothing reads it any more.
     """
     if start_iteration > 0 and start_iteration >= max_iter:
         # a resumed checkpoint already at/past the iteration bound would
@@ -273,36 +313,41 @@ def iterate(
     i = start_iteration
     while i < max_iter:
         t0 = time.time()
-        new_state, measure = step(state, i)
+        new_state, aggs, measure = step(state, i)
         i += 1
         sealed = i % checkpoint_every == 0 or i == max_iter
-        if sealed and checkpointer is None:
-            # lazy cut: measure's aggregate materializes the checkpoint in
-            # the same job — one action for the whole round
-            new_state = cut_lineage(new_state, eager=False)
+        durable = sealed and checkpointer is not None
+        m = SuperstepMetrics(superstep=i)
+        if durable:
+            # the write is the round's one job; its observation is the
+            # aggregate, and the commit waits for it
+            obs = Observation()
+            new_state = checkpointer.save(new_state.observe(obs, *aggs), m)
+            row = obs.get
         else:
-            new_state = new_state.persist()
-        delta, rows = measure(new_state)
+            if sealed:
+                # lazy cut: the aggregate materializes the checkpoint in
+                # the same job
+                new_state = cut_lineage(new_state, eager=False)
+            else:
+                new_state = new_state.persist()
+            row = new_state.agg(*aggs).collect()[0]
+        delta, rows = measure(row)
         converged = delta <= tol
-        m = SuperstepMetrics(
-            superstep=i,
-            rows=int(rows),
-            delta=float(delta),
-            seconds=round(time.time() - t0, 4),
-            partitions=new_state.rdd.getNumPartitions(),
-        )
+        m.rows, m.delta = int(rows), float(delta)
+        m.seconds = round(time.time() - t0, 4)
+        m.partitions = new_state.rdd.getNumPartitions()
         metrics.append(m)
-        if checkpointer is not None and (sealed or converged):
-            reread = checkpointer.save(new_state, m)
-            new_state.unpersist()
-            new_state = reread.persist()
-            new_state.count()
-            sealed = True  # parquet reread carries no lineage
+        if durable:
+            checkpointer.commit(m)
         elif converged and not sealed:
             # seal the final state so the caller never inherits the window
-            cut = cut_lineage(new_state)
+            if checkpointer is not None:
+                sealed_state = checkpointer.save(new_state, m)
+            else:
+                sealed_state = cut_lineage(new_state)
             new_state.unpersist()
-            new_state = cut
+            new_state = sealed_state
             sealed = True
         if sealed:
             # the lineage-free successor is materialized: every older

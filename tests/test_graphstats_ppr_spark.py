@@ -54,6 +54,32 @@ def test_ppr_matches_dense_reference_with_dangling(spark):
     assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)
 
 
+def test_ppr_checkpointed_matches_uncheckpointed(spark, tmp_path):
+    # the teleport vector rides in the held state, so a durable run reads
+    # it back from each step's parquet
+    from dachshund_spark.operators.pagerank import pagerank
+    from dachshund_spark.plans.superstep import CheckpointManager
+
+    edges = [(1, 2), (2, 3), (3, 1), (2, 4), (4, 5), (6, 7), (7, 6)]
+    seeds_l = [1, 6]
+    seeds = spark.createDataFrame([(v,) for v in seeds_l], "v bigint")
+    runs = []
+    for cp in (None, CheckpointManager(str(tmp_path), "ppr")):
+        runs.append({
+            r["v"]: r["pagerank"]
+            for r in pagerank(
+                _edges_df(spark, edges), tol=0.0, max_iter=8, teleport=seeds,
+                checkpointer=cp,
+            ).collect()
+        })
+    plain, durable = runs
+    want = _ppr_numpy(edges, seeds_l, 0.85, 8)
+    assert set(plain) == set(durable) == set(want)
+    for v in want:
+        assert abs(durable[v] - plain[v]) <= 1e-9, v
+        assert abs(durable[v] - want[v]) <= 1e-9, v
+
+
 def test_ppr_zero_outside_seed_reachability(spark):
     # vertices unreachable from the seed set must get exactly 0 rank
     edges = [(1, 2), (2, 1), (3, 4), (4, 3)]

@@ -304,6 +304,28 @@ def test_pagerank_block_execution(spark):
         assert abs(got2[v] - oracle2[v]) <= 1e-9
 
 
+@pytest.mark.parametrize("cadence", [1, 2])
+def test_pagerank_block_execution_checkpointed(spark, tmp_path, cadence):
+    # chained blocks anchored on a durable parquet reread (cadence 1) and
+    # on a persisted in-between state (cadence 2)
+    from dachshund_spark.plans.superstep import CheckpointManager
+
+    directed = KARATE_CLUB_EDGES + [(v, u) for u, v in KARATE_CLUB_EDGES]
+    oracle = K.pagerank_numpy(directed, tol=0.0, max_iter=12)
+    cp = CheckpointManager(str(tmp_path), "pr_block")
+    got = {
+        r["v"]: r["pagerank"]
+        for r in pagerank(
+            B.edges_df(spark, directed), tol=0.0, max_iter=12, block_size=3,
+            checkpointer=cp, checkpoint_every=cadence,
+        ).collect()
+    }
+    assert cp.latest()[0] == 4  # four blocks of three supersteps
+    assert set(got) == set(oracle)
+    for v in oracle:
+        assert abs(got[v] - oracle[v]) <= 1e-9, v
+
+
 def test_distributed_acyclicity_and_wcc(spark):
     from dachshund_spark.operators.components import (
         is_acyclic as dist_is_acyclic,
