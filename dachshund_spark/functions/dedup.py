@@ -353,28 +353,3 @@ def simhash_candidate_pairs(docs: DataFrame, bands: int = 4) -> DataFrame:
         .select("doc_a", "doc_b")
         .distinct()
     )
-
-
-def embedding_cosine_pairs(
-    embeddings: DataFrame, threshold: float = 0.95
-) -> DataFrame:
-    """Embedding near-duplicate pairs by exact cosine >= threshold
-    (brute-force; see functions.similarity for the LSH-bucketed scale
-    path).  Returns (vec_a, vec_b, cosine rounded 6dp)."""
-    from .similarity import cosine_col
-
-    a = embeddings.select(
-        F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a")
-    )
-    b = embeddings.select(
-        F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b")
-    )
-    return (
-        a.join(b, F.col("vec_a") < F.col("vec_b"))
-        .select(
-            "vec_a",
-            "vec_b",
-            F.round(cosine_col(F.col("emb_a"), F.col("emb_b")), 6).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )

@@ -20,7 +20,6 @@ ints. Reference citations are given per function (file:line in
 from __future__ import annotations
 
 import heapq
-import json
 import math
 import random
 from collections import defaultdict, deque
@@ -157,12 +156,6 @@ def connected_components(adj, ignore_nodes=None, ignore_edges=None):
     for nid, idx in membership.items():
         out[idx].append(nid)
     return out
-
-
-def component_sets(adj):
-    """Canonical, order-free view: frozensets of nodes per component."""
-    comps = connected_components(adj)
-    return {frozenset(c) for c in comps if c}
 
 
 def is_connected(adj):
@@ -1059,10 +1052,6 @@ def _floor3(x):
     if not math.isfinite(x):
         return None
     return math.floor(x * 1000.0) / 1000.0
-
-
-def graph_stats_json(adj, seed=None):
-    return json.dumps(graph_stats(adj, seed=seed), sort_keys=True)
 
 
 # ---------------------------------------------------------------------------

@@ -416,65 +416,6 @@ def train_ivf_centroids(
     return kmeans_centroids(mat, n_centroids, n_iters)
 
 
-def ivf_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_centroids: int = 32,
-    n_probe: int = 4,
-    n_iters: int = 10,
-    train_limit: int = 4096,
-    centroids=None,
-) -> DataFrame:
-    """IVF approximate top-k cosine neighbors: corpus vectors live in
-    their single nearest centroid cell, queries probe their ``n_probe``
-    nearest cells, candidates come from a cell-id EQUI-join, and an
-    exact cosine re-rank picks the top k.  Returns
-    (query_id, neighbor_id, cosine, rank)."""
-    if centroids is None:
-        centroids = train_ivf_centroids(
-            embeddings, n_centroids, n_iters, train_limit
-        )
-    assign1 = _ivf_cells_udf(centroids, 1)
-    probe = _ivf_cells_udf(centroids, n_probe)
-    corpus = embeddings.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        F.element_at(assign1(F.col("embedding")), 1).alias("cid"),
-    )
-    q = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.explode(probe(F.col("embedding"))).alias("cid"),
-    )
-    cands = (
-        q.join(corpus, "cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    scored = cands.select(
-        "query_id",
-        "neighbor_id",
-        cosine_col(
-            F.col("q_emb").cast("array<double>"),
-            F.col("c_emb").cast("array<double>"),
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cosine", 6).alias("cosine"),
-            "rank",
-        )
-    )
-
-
 def ivf_recall_stats(
     embeddings: DataFrame,
     queries: DataFrame,

@@ -96,40 +96,21 @@ def degrees(edges: DataFrame) -> DataFrame:
     )
 
 
-def out_degrees(edges: DataFrame) -> DataFrame:
-    return edges.groupBy(F.col("src").alias("v")).agg(
-        F.count("*").alias("out_degree")
-    )
-
-
 def min_degree_prune(edges: DataFrame, min_degree: int, max_iter: int = 100) -> DataFrame:
     """Iteratively remove vertices with degree < min_degree until fixpoint;
-    returns the surviving canonical edge set.  DataFrame form of
-    typed_graph_builder.rs:174-228 (trim_edges/prune) — the same loop as
-    distributed k-core peeling."""
-    cur = canonical_undirected(edges).persist()
-    cur.count()
-    for _ in range(max_iter):
-        deg = degrees(cur)
-        bad = deg.filter(F.col("degree") < min_degree).select("v").persist()
-        n_bad = bad.count()
-        if n_bad == 0:
-            bad.unpersist()
-            break
-        from ..plans.superstep import cut_lineage, release
+    returns the surviving canonical edge set, the edges of the
+    ``min_degree``-core.  DataFrame form of typed_graph_builder.rs:174-228
+    (trim_edges/prune); raises ``RuntimeError`` if ``max_iter`` peel
+    rounds do not reach the fixpoint."""
+    from .coreness import k_core_vertices
 
-        nxt = cut_lineage(
-            cur.join(bad, cur.src == bad.v, "left_anti")
-            .join(bad, cur.dst == bad.v, "left_anti")
-            # lineage cut — the plan otherwise grows ~3x per round
-        )
-        # nxt is an EAGER lineage-free cut: the superseded cur (itself a
-        # cut product after round 1 — release frees its checkpoint RDD
-        # blocks, which plain unpersist leaves to JVM GC) is unreachable
-        release(cur)
-        bad.unpersist()
-        cur = nxt
-    return cur
+    core = k_core_vertices(edges, min_degree, max_iter)
+    return (
+        canonical_undirected(edges)
+        .join(core.withColumnRenamed("v", "src"), "src", "left_semi")
+        .join(core.withColumnRenamed("v", "dst"), "dst", "left_semi")
+        .select("src", "dst")
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -1,5 +1,5 @@
 """Distributed degeneracy family: k-core membership, coreness values,
-k-trusses — round-based peeling loops (anti-join peel + degree re-agg).
+k-trusses and edge trussness.
 
 Semantics match the *correct* peeling the reference's tests pin down
 (tests/simple_graph.rs:315-344, tests/karate_club.rs:460-486); the
@@ -8,14 +8,18 @@ reference's own `_get_k_cores` carries an acknowledged bug
 ``operators.pergraph``; these operators are the single-giant-graph scale
 path.
 
-Scale notes: every peel round is one degree aggregation + one anti-join;
-rounds for k-core = peel depth (small); rounds for full coreness =
-number of distinct shell levels × cascade depth.  Edges stay
-repartitioned on src across rounds; lineage is cut by re-persisting the
-shrinking edge set each round (it shrinks geometrically in practice).
+Loops: ``coreness`` and the k-core / k-truss / trussness peels run on
+``plans.superstep.iterate``.  A peel's state is its surviving rows with
+the aggregate it tests (degree, triangle support); a round subtracts what
+the dropped rows took away instead of re-aggregating the graph, and the
+round's aggregate counts the rows the NEXT round drops, so convergence
+needs no separate count.  ``weighted_coreness`` keeps its own sweep: it
+re-sums float weights per round, so its exact shell comparisons hold.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -26,7 +30,12 @@ from ..plans.superstep import (
     release,
     superstep_state_side,
 )
-from .builders import canonical_undirected, symmetrized, vertices
+from .builders import (
+    canonical_undirected,
+    min_degree_prune,
+    symmetrized,
+    vertices,
+)
 from .components import connected_components
 
 
@@ -83,47 +92,48 @@ class _PeelAccumulator:
 
 def k_core_vertices(edges: DataFrame, k: int, max_rounds: int = 1000) -> DataFrame:
     """Vertices of the k-core: iteratively delete degree < k.
-    Returns DataFrame[v]."""
+    Returns DataFrame[v]; raises ``RuntimeError`` if ``max_rounds`` runs
+    out before the fixpoint.  The state is the surviving (v, degree)
+    frame: a round keeps degree >= k and subtracts each vertex's edges
+    into the vertices it peels."""
     sym = symmetrized(edges).persist()
-    sym.count()
-    for _ in range(max_rounds):
-        deg = _sym_degrees(sym)
-        bad = deg.filter(F.col("degree") < k).select("v").persist()
-        if bad.count() == 0:
-            bad.unpersist()
-            break
-        nxt = cut_lineage(
-            sym.join(bad.withColumnRenamed("v", "src"), "src", "left_anti")
-            .join(bad.withColumnRenamed("v", "dst"), "dst", "left_anti")
-            .select("src", "dst")
-            # the cut truncates lineage AND resets inherited stats: each
-            # round references the previous edge set three times, so
-            # without it the logical plan grows ~3x per round
+
+    def step(state: DataFrame, i: int):
+        peeled = state.filter(F.col("degree") < k).select(F.col("v").alias("src"))
+        lost = (
+            sym.join(peeled, "src", "left_semi")
+            .groupBy(F.col("dst").alias("v"))
+            .agg(F.count("*").alias("lost"))
         )
-        release(sym)
-        bad.unpersist()
-        sym = nxt
-    # cut the result so the final edge-set blocks can be released too
-    # (unpersist on a cut product is a no-op for its checkpoint blocks;
-    # release() drops them)
-    out = cut_lineage(sym.select(F.col("src").alias("v")).distinct())
-    release(sym)
-    return out
+        new_state = (
+            state.filter(F.col("degree") >= k)
+            .join(lost, "v", "left")
+            .select("v", (F.col("degree") - F.coalesce("lost", F.lit(0))).alias("degree"))
+        )
+        return new_state, aggs, measure
+
+    aggs = [
+        F.count("*").alias("n"),
+        F.sum((F.col("degree") < k).cast("long")).alias("drop"),
+    ]
+
+    def measure(row):
+        return int(row["drop"] or 0), int(row["n"])
+
+    result = iterate(_sym_degrees(sym), step, max_iter=max_rounds, checkpoint_every=1)
+    sym.unpersist()
+    if not result.converged:
+        release(result.state)
+        raise RuntimeError(f"k_core_vertices: not converged in {max_rounds} rounds")
+    return result.state.select("v")
 
 
 def k_core_components(edges: DataFrame, k: int) -> DataFrame:
     """Connected components of the k-core — DataFrame[v, component]
     (≡ reference get_k_cores output granularity, coreness.rs:55-58)."""
-    spark = edges.sparkSession
-    core_verts = cut_lineage(k_core_vertices(edges, k))
-    canon = canonical_undirected(edges)
-    core_edges = (
-        canon.join(core_verts.withColumnRenamed("v", "src"), "src")
-        .join(core_verts.withColumnRenamed("v", "dst"), "dst")
-        .select("src", "dst")
-    )
-    if core_verts.limit(1).count() == 0:
-        return spark.createDataFrame([], "v long, component long")
+    core_edges = min_degree_prune(edges, k)
+    if core_edges.limit(1).count() == 0:
+        return edges.sparkSession.createDataFrame([], "v long, component long")
     return connected_components(core_edges)
 
 
@@ -524,7 +534,9 @@ def _decrement_support(
     """Sparse round of the truss peels (``k_truss_edges``, ``trussness``):
     ``surviving`` — the (src, dst, support) ``state`` minus this round's
     ``drop`` edges — with each support decremented by the affected
-    triangles it loses.  Returns the lineage-cut successor state."""
+    triangles it loses.  Returns the lazy successor state; ``iterate``
+    seals it with the stats-resetting cut this inner-join loop needs (see
+    plans.superstep.cut_lineage)."""
     sym_e = state.select("src", "dst").union(
         state.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -546,15 +558,39 @@ def _decrement_support(
         .union(tri3.select(F.col("y").alias("src"), F.col("z").alias("dst")))
     )
     dec = dec_edges.groupBy("src", "dst").agg(F.count("*").alias("dec"))
-    # the stats-resetting cut is ESSENTIAL for this inner-join loop (see
-    # plans.superstep.cut_lineage)
-    return cut_lineage(
-        surviving.join(dec, ["src", "dst"], "left").select(
-            "src",
-            "dst",
-            (F.col("support") - F.coalesce("dec", F.lit(0))).alias("support"),
-        )
+    return surviving.join(dec, ["src", "dst"], "left").select(
+        "src",
+        "dst",
+        (F.col("support") - F.coalesce("dec", F.lit(0))).alias("support"),
     )
+
+
+def _support_round(
+    state: DataFrame, k: int, n_drop: int, n_edges: int
+) -> tuple[DataFrame, DataFrame]:
+    """One truss peel round over the (src, dst, support) state at stage
+    k: returns the lazy successor and the (src, dst) edges that leave the
+    state, which on a dense round (dropped > survivors / 4) include the
+    survivors the recount leaves in no triangle.  The state is unique on
+    (src, dst), so the survivors are the complementary filter."""
+    keep = F.col("support") >= k - 2
+    drop = state.filter(~keep).select("src", "dst")
+    surviving = state.filter(keep)
+    if n_drop * 4 <= n_edges - n_drop:
+        return _decrement_support(state, drop, surviving), drop
+    surv_edges = surviving.select("src", "dst")
+    new_state = _edge_support_full(surv_edges)
+    shed = surv_edges.join(new_state.select("src", "dst"), ["src", "dst"], "left_anti")
+    return new_state, drop.union(shed)
+
+
+def _support_aggs(k: int) -> list:
+    """Rows left, rows stage ``k`` drops next, least support."""
+    return [
+        F.count("*").alias("n"),
+        F.sum((F.col("support") < k - 2).cast("long")).alias("drop"),
+        F.min("support").alias("min_support"),
+    ]
 
 
 def k_truss_edges(edges: DataFrame, k: int, max_rounds: int = 1000) -> DataFrame:
@@ -571,7 +607,7 @@ def k_truss_edges(edges: DataFrame, k: int, max_rounds: int = 1000) -> DataFrame
     superset-preserving prune is sound, and the full iterative core
     costs several driver rounds for marginal extra pruning.
 
-    Frontier-incremental peel with a density switch:
+    Frontier-incremental peel with a density switch (``_support_round``):
 
     * sparse rounds (dropped edges ≪ survivors — the long cascade tail)
       touch only the AFFECTED triangles — those containing an edge
@@ -589,6 +625,8 @@ def k_truss_edges(edges: DataFrame, k: int, max_rounds: int = 1000) -> DataFrame
       nearly everything, enumerating its unoriented triangle neighborhood
       costs Σ deg over dropped edges — far more than one oriented pass
       over the (small) survivor graph.
+
+    Raises ``RuntimeError`` if ``max_rounds`` runs out before the fixpoint.
     """
     base = canonical_undirected(edges)
     if k <= 2:
@@ -609,42 +647,26 @@ def k_truss_edges(edges: DataFrame, k: int, max_rounds: int = 1000) -> DataFrame
     )
     state = _edge_support_full(canon)
     release(canon)
-    n_edges = state.count()
-    for _ in range(max_rounds):
-        # drop is a plain filter over the (leaf) state: re-evaluating it in
-        # the joins below is a trivial scan, and skipping a checkpoint here
-        # saves one driver job per round — at toy scale the peel cost IS
-        # the per-round job count
-        drop = state.filter(F.col("support") < k - 2).select("src", "dst")
-        n_drop = drop.count()
-        if n_drop == 0:
-            break
-        surviving = state.join(drop, ["src", "dst"], "left_anti")
-        n_surv = n_edges - n_drop
-        if n_drop * 4 > n_surv:
-            # dense round: one oriented pass over the (cut) survivors —
-            # without the cut, _edge_support_full's several reads of the
-            # survivor set each replay the anti-join
-            surv_edges = cut_lineage(surviving.select("src", "dst"))
-            new_state = _edge_support_full(surv_edges)
-            release(surv_edges)
-        else:
-            new_state = _decrement_support(state, drop, surviving)
-        release(state)
-        state = new_state
-        # dense rounds may shed triangle-free survivors too (they are
-        # absent from the recomputed support table — see
-        # _edge_support_full), so recount from the materialized cut
-        n_edges = (
-            state.count() if n_drop * 4 > n_surv else n_surv
-        )
-    return state.select("src", "dst")
+    n_edges = n_drop = 0
 
+    def step(state: DataFrame, i: int):
+        new_state, _ = _support_round(state, k, n_drop, n_edges)
+        return new_state, aggs, measure
 
-def k_truss_components(edges: DataFrame, k: int) -> DataFrame:
-    """DataFrame[v, component] over the k-truss subgraph."""
-    truss = k_truss_edges(edges, k)
-    return connected_components(truss)
+    aggs = _support_aggs(k)
+
+    def measure(row):
+        nonlocal n_edges, n_drop
+        n_edges, n_drop = int(row["n"]), int(row["drop"] or 0)
+        return n_drop, n_edges
+
+    if measure(state.agg(*aggs).collect()[0])[0] == 0:
+        return state.select("src", "dst")
+    result = iterate(state, step, max_iter=max_rounds, checkpoint_every=1)
+    if not result.converged:
+        release(result.state)
+        raise RuntimeError(f"k_truss_edges: not converged in {max_rounds} rounds")
+    return result.state.select("src", "dst")
 
 
 def trussness(edges: DataFrame, max_rounds: int = 10000) -> DataFrame:
@@ -681,50 +703,36 @@ def trussness(edges: DataFrame, max_rounds: int = 10000) -> DataFrame:
     )
     release(canon)
     labeled: list[DataFrame] = [base2]
-    n_edges = state.count()
     k = 3
-    rounds = 0
-    while n_edges > 0:
-        rounds += 1
-        if rounds > max_rounds:
-            raise RuntimeError(f"trussness: not converged in {max_rounds} rounds")
-        drop = state.filter(F.col("support") < k - 2).select("src", "dst")
-        n_drop = drop.count()
-        if n_drop == 0:
-            # stage dry: jump to the first stage with any drop
-            min_sup = state.agg(F.min("support")).collect()[0][0]
-            k = int(min_sup) + 3
-            continue
+    n_edges, n_drop = 0, None
+
+    def step(state: DataFrame, i: int):
+        nonlocal n_drop
+        if n_drop is None:
+            # first round of a stage: its drop count is not known yet
+            n_drop = state.filter(F.col("support") < k - 2).count()
+        new_state, gone = _support_round(state, k, n_drop, n_edges)
         labeled.append(
-            cut_lineage(drop.select(
-                "src", "dst", F.lit(k - 1).alias("trussness")
-            ))
+            cut_lineage(gone.select("src", "dst", F.lit(k - 1).alias("trussness")))
         )
-        drop = labeled[-1].select("src", "dst")
-        surviving = state.join(drop, ["src", "dst"], "left_anti")
-        n_surv = n_edges - n_drop
-        if n_drop * 4 > n_surv:
-            surv_edges = cut_lineage(surviving.select("src", "dst"))
-            new_state = _edge_support_full(surv_edges)
-            # shed support-0 survivors: same stage label (see docstring)
-            shed = cut_lineage(
-                surv_edges.join(
-                    new_state.select("src", "dst"), ["src", "dst"],
-                    "left_anti",
-                ).select("src", "dst", F.lit(k - 1).alias("trussness"))
-            )
-            labeled.append(shed)
-            release(surv_edges)
-        else:
-            new_state = _decrement_support(state, drop, surviving)
-        release(state)
-        state = new_state
-        n_edges = state.count() if n_drop * 4 > n_surv else n_surv
-    out = base2.limit(0)
-    for leaf in labeled:
-        out = out.union(leaf)
-    result = cut_lineage(out)
-    release(state)
-    for leaf in labeled:
+        return new_state, _support_aggs(k), measure
+
+    def measure(row):
+        nonlocal k, n_edges, n_drop
+        n_edges, n_drop = int(row["n"]), int(row["drop"] or 0)
+        if n_edges and not n_drop:
+            # stage dry: jump to the first stage with any drop
+            k, n_drop = int(row["min_support"]) + 3, None
+        return n_edges, n_edges
+
+    # every support is >= 1, so stage 3 is dry: this jumps to the first stage
+    converged = True
+    if measure(state.agg(*_support_aggs(k)).collect()[0])[0]:
+        result = iterate(state, step, max_iter=max_rounds, checkpoint_every=1)
+        state, converged = result.state, result.converged
+    out = cut_lineage(reduce(DataFrame.union, labeled)) if converged else None
+    for leaf in [state, *labeled]:
         release(leaf)
-    return result
+    if not converged:
+        raise RuntimeError(f"trussness: not converged in {max_rounds} rounds")
+    return out

@@ -15,6 +15,7 @@ from dachshund_spark.operators.components import (
 from dachshund_spark.operators.coreness import (
     coreness,
     k_core_components,
+    k_core_vertices,
     k_truss_edges,
 )
 from dachshund_spark.operators.label_propagation import label_propagation
@@ -133,6 +134,34 @@ def test_k_core_components(spark):
         r["size"] for r in component_sizes(cc).collect()
     )
     assert sizes == [10, 10]
+
+
+def test_k_core_vertices_match_kernel(spark):
+    # every k from 0 to one past the top coreness: k <= 1 keeps every
+    # vertex, the last k has an empty core; in the 3-path the 2-core peel
+    # isolates the middle vertex in round 1 and drops it in round 2
+    for fixture in (KARATE_CLUB_EDGES, TWO_KARATE_CLUBS_BRIDGE, [(1, 2), (2, 3)]):
+        e = B.edges_df(spark, fixture)
+        adj = K.build_undirected_adj(fixture)
+        for k in range(max(K.coreness_values(adj).values()) + 2):
+            want = {v for comp in K.k_cores(adj, k) for v in comp}
+            got = {r["v"] for r in k_core_vertices(e, k).collect()}
+            assert got == want, (len(fixture), k)
+
+
+def test_peels_raise_when_max_rounds_runs_out(spark):
+    # the 3-path's 2-core peel needs two rounds (ends, then the middle)
+    path = B.edges_df(spark, [(1, 2), (2, 3)])
+    with pytest.raises(RuntimeError, match="not converged"):
+        k_core_vertices(path, 2, max_rounds=1)
+    # K6 plus a tail of three triangles hanging off it: the 4-truss peel
+    # drops the tail's support-1 edges in round 1, which leaves (1, 7)
+    # and (1, 8) in no triangle for round 2
+    k6 = [(a, b) for a in range(1, 7) for b in range(a + 1, 7)]
+    g = B.edges_df(spark, k6 + [(1, 7), (2, 7), (7, 8), (1, 8), (3, 8)])
+    with pytest.raises(RuntimeError, match="not converged"):
+        k_truss_edges(g, 4, max_rounds=1)
+    assert {(r["src"], r["dst"]) for r in k_truss_edges(g, 4).collect()} == set(k6)
 
 
 def test_k_truss_edges(spark):
