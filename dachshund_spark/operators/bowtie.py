@@ -103,9 +103,7 @@ def bowtie_decomposition(
     )
     verts = cut_lineage(vertices(e))
 
-    scc = cut_lineage(
-        strongly_connected_components(e, max_outer=max_outer, max_iter=max_iter)
-    )
+    scc = strongly_connected_components(e, max_outer=max_outer, max_iter=max_iter)
     giant = (
         scc.groupBy("component")
         .agg(F.count(F.lit(1)).alias("n"))

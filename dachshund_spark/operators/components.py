@@ -21,6 +21,8 @@ Scale design:
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -32,6 +34,7 @@ from ..plans.superstep import (
     superstep_state_side,
 )
 from .builders import symmetrized, vertices
+from .dag import _kahn_peel
 
 
 def connected_components(
@@ -359,17 +362,20 @@ def strongly_connected_components(
     TRIMMING (the FW-BW-Trim refinement, McLendon et al., "Finding
     strongly connected components in distributed graphs", JPDC 2005):
     before every peel round, vertices whose in- OR out-degree is zero in
-    the current subgraph are settled as singleton SCCs via two anti-joins
-    and removed, repeatedly until none remain.  A trim round costs ~4
-    tiny jobs; a peel round costs a full bidirectional label-propagation
-    FIXPOINT (diameter supersteps) — on web-shaped digraphs, whose
-    condensation is mostly a deep DAG around a giant core, trimming
-    absorbs the DAG layers (from both ends at once) and leaves the
-    expensive peel only the genuinely cyclic residue.  Interleaved
-    same-session A/B (BENCH/PLANS.md, "SCC trimming"; 2/2 pairs each,
-    alternating order): banded-page bow-tie digraph 21.9/19.0 s vs
-    127.6/103.5 s (~5-6x), event digraph 12.6/11.8 s vs 36.1/34.7 s
-    (~3x); outputs asserted identical per pair.
+    the current subgraph are settled as singleton SCCs, repeatedly until
+    none remain.  The trim is ``dag._kahn_peel`` with both ends: one
+    ``iterate`` round per trim layer, each a semi-join of that layer's
+    vertices against the cached edges that decrements their neighbours'
+    in/out degrees, with no recount of the surviving edge table.  A peel
+    round costs a full bidirectional label-propagation FIXPOINT
+    (diameter supersteps) — on web-shaped digraphs, whose condensation is
+    mostly a deep DAG around a giant core, trimming absorbs the DAG
+    layers (from both ends at once) and leaves the expensive peel only
+    the genuinely cyclic residue.  Interleaved same-session A/B
+    (BENCH/PLANS.md, "SCC trimming"; 2/2 pairs each, alternating order):
+    banded-page bow-tie digraph 21.9/19.0 s vs 127.6/103.5 s (~5-6x),
+    event digraph 12.6/11.8 s vs 36.1/34.7 s (~3x); outputs asserted
+    identical per pair.
 
     Peel: per outer round compute f(v) = min id that reaches v (hash-min
     propagation along edges) and b(v) = min id v reaches (propagation
@@ -382,107 +388,56 @@ def strongly_connected_components(
     singleton's label is its own id — identical to what the peel would
     assign it).
 
-    Returns DataFrame[v, component]."""
-    spark = edges.sparkSession
+    Returns DataFrame[v, component], one sealed cut: ``release`` it once
+    nothing reads it any more."""
     cur = cut_lineage(
         edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
     )
-    remaining = cut_lineage(vertices(edges))
-    results = []
-    n_left = remaining.count()
-    for _ in range(max_outer):
-        # ---- trim to exhaustion: settle acyclic-by-degree singletons ----
-        # One driver job per trim layer: trivial's count materializes its
-        # lazy cut, and the successor remaining/cur cuts stay lazy until
-        # the NEXT layer's count (or the post-loop seal) computes them —
-        # superseded states are release()d only after a materialized
-        # lineage-free successor exists (the engine's deferred-release
-        # discipline), so a layer costs 1 job instead of the old 3.
-        pending_trim: list[DataFrame] = []
-        while n_left > 0:
-            srcs = cur.select(F.col("src").alias("v")).distinct()
-            dsts = cur.select(F.col("dst").alias("v")).distinct()
-            # (remaining \ srcs) ∪ (remaining \ dsts) ==
-            # remaining \ (srcs ∩ dsts): one semi-join (both distinct
-            # outputs are already hash(v)-partitioned, so it adds no
-            # exchange) plus one anti-join replaces two anti-joins +
-            # union + distinct — one fewer pass over `remaining` and one
-            # fewer exchange per trim layer (BENCH/AB_TRIM_SHAPE_r07.txt:
-            # outputs md5-identical, speed a tie)
-            both = srcs.join(dsts, "v", "left_semi")
-            trivial = cut_lineage(
-                remaining.join(both, "v", "left_anti"), eager=False
-            )
-            k = trivial.count()
-            # trivial is now a materialized leaf: the PREVIOUS layer's lazy
-            # remaining/cur cuts were computed (and checkpointed) by this
-            # same job, so the states they superseded are now unreachable
-            for p in pending_trim:
-                release(p)
-            pending_trim.clear()
-            if k == 0:
-                release(trivial)
-                break
-            results.append(trivial.select("v", F.col("v").alias("component")))
-            pending_trim += [remaining, cur]
-            remaining = cut_lineage(
-                remaining.join(trivial, "v", "left_anti"), eager=False
-            )
-            n_left -= k
-            cur = cut_lineage(
-                cur.join(trivial.withColumnRenamed("v", "src"), "src", "left_anti")
-                .join(trivial.withColumnRenamed("v", "dst"), "dst", "left_anti"),
-                eager=False,
-            )
-            # trivial stays live: its blocks back the appended result leg
-        if pending_trim:
-            # loop exited with the newest remaining/cur lazy cuts not yet
-            # computed: force their (checkpointing) materialization before
-            # releasing the predecessors their recompute path would need
-            remaining.count()
-            cur.count()
-            for p in pending_trim:
-                release(p)
-            pending_trim.clear()
-        if n_left == 0:
+    verts = vertices(edges)
+    # each leg projects a trim state or a label state: those stay live
+    # (O(remaining vertices) rows per outer round) until the final union
+    # is sealed
+    legs: list[DataFrame] = []
+    leaves: list[DataFrame] = []
+    for rnd in range(max_outer + 1):
+        # a trim cut short by its round bound only leaves more of the
+        # graph to the label peel, which settles singletons too
+        trimmed, n_left, _ = _kahn_peel(cur, verts, both=True)
+        leaves.append(trimmed)
+        legs.append(
+            trimmed.filter(F.col("level").isNotNull())
+            .select("v", F.col("v").alias("component"))
+        )
+        if n_left == 0 or rnd == max_outer:
             break
-        labels = _bidirectional_min_labels(
-            cur, remaining, max_iter, n_verts=n_left
+        remaining = trimmed.filter(F.col("level").isNull()).select("v")
+        core = _induced(cur, remaining)
+        labels = _bidirectional_min_labels(core, remaining, max_iter, n_verts=n_left)
+        leaves.append(labels)
+        legs.append(
+            labels.filter(F.col("f") == F.col("b"))
+            .select("v", F.col("f").alias("component"))
         )
-        # lazy: the eager new_remaining cut below reads settled, and that
-        # job materializes settled's checkpoint too
-        settled = cut_lineage(
-            labels.filter(F.col("f") == F.col("b")).select(
-                "v", F.col("f").alias("component")
-            ),
-            eager=False,
-        )
-        results.append(settled)
-        new_remaining = cut_lineage(remaining.join(settled, "v", "left_anti"))
-        # both cuts are materialized: labels' checkpoint blocks (V rows
-        # per outer round) and the old remaining are unreachable
-        release(labels)
-        release(remaining)
-        remaining = new_remaining
-        n_left = remaining.count()
-        done = settled.select("v")
-        new_cur = cut_lineage(
-            cur.join(done.withColumnRenamed("v", "src"), "src", "left_anti")
-            .join(done.withColumnRenamed("v", "dst"), "dst", "left_anti")
-        )
+        verts = labels.filter(F.col("f") != F.col("b")).select("v")
+        new_cur = cut_lineage(_induced(core, verts))
         release(cur)
         cur = new_cur
-    if n_left != 0:
+    out = None if n_left else cut_lineage(reduce(DataFrame.union, legs))
+    for leaf in (cur, *leaves):
+        release(leaf)
+    if out is None:
         raise RuntimeError(
             f"strongly_connected_components: {n_left} vertices unsettled "
             f"after {max_outer} rounds (raise max_outer)"
         )
-    if not results:
-        return spark.createDataFrame([], "v long, component long")
-    out = results[0]
-    for r in results[1:]:
-        out = out.union(r)
     return out
+
+
+def _induced(edges: DataFrame, verts: DataFrame) -> DataFrame:
+    """The edges with both endpoints in ``verts`` (a ``v`` column)."""
+    return edges.join(
+        verts.withColumnRenamed("v", "src"), "src", "left_semi"
+    ).join(verts.withColumnRenamed("v", "dst"), "dst", "left_semi")
 
 
 def is_acyclic(edges: DataFrame, max_rounds: int = 100000) -> bool:
@@ -490,26 +445,36 @@ def is_acyclic(edges: DataFrame, max_rounds: int = 100000) -> bool:
     simple_directed_graph.rs:25-43): repeatedly remove vertices with no
     remaining out-edges; acyclic iff the edge set empties.
 
-    One driver action per round: the surviving edge count is carried from
-    the previous round instead of being recounted, and the lineage cut is
-    lazy (materialized by the same count job).  Each round strips every
-    current sink, so the round count is bounded by the longest directed
-    path ending in a sink (≤ longest chain; a DAG of depth d finishes in
-    d rounds, a cycle is detected the first round no sink disappears)."""
-    cur = cut_lineage(edges.select("src", "dst").distinct())
-    n = cur.count()
-    for _ in range(max_rounds):
-        if n == 0:
-            return True
-        # vertices that still have out-edges
-        has_out = cur.select(F.col("src").alias("v")).distinct()
-        # keep only edges whose dst still has out-edges (dst is not a sink)
-        nxt = cut_lineage(
-            cur.join(has_out.withColumnRenamed("v", "dst"), "dst", "left_semi"),
-            eager=False,
+    Runs on ``iterate`` at cadence 1.  The state is the surviving edge
+    frame plus a ``keep`` flag: a round flags the surviving edges whose
+    dst still has an out-edge, and its one aggregate counts the rows and
+    the kept rows, so the round knows how many edges it stripped without
+    a recount (the next round drops the unflagged rows first).  Each
+    round strips every current sink, so the round count is bounded by
+    the longest directed path ending in a sink (≤ longest chain; a DAG
+    of depth d finishes in d rounds, a cycle is detected the first round
+    no sink disappears)."""
+    def step(state: DataFrame, i: int):
+        live = state.filter("keep").select("src", "dst")
+        has_out = live.selectExpr("src as dst", "true as keep").distinct()
+        new_state = live.join(has_out, "dst", "left").select(
+            "src", "dst", F.coalesce("keep", F.lit(False)).alias("keep")
         )
-        n_next = nxt.count()
-        if n_next == n:
-            return False  # no sink removed: a cycle remains
-        cur, n = nxt, n_next
-    raise RuntimeError("is_acyclic did not converge")
+        return new_state, aggs, measure
+
+    aggs = [F.count("*").alias("n"), F.sum(F.col("keep").cast("long")).alias("kept")]
+    kept = [0]
+
+    def measure(row):
+        kept[0] = int(row["kept"] or 0)
+        # converged once the edges are gone or a round strips nothing
+        return (0 if kept[0] == 0 else int(row["n"]) - kept[0]), kept[0]
+
+    result = iterate(
+        edges.select("src", "dst", F.lit(True).alias("keep")).distinct(), step,
+        max_iter=max_rounds, checkpoint_every=1,
+    )
+    release(result.state)
+    if not result.converged:
+        raise RuntimeError("is_acyclic did not converge")
+    return kept[0] == 0

@@ -12,7 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .builders import symmetrized, vertices
+from ..plans.superstep import cut_lineage, release
+from .builders import symmetrized
 
 
 def bfs_distances(edges: DataFrame, source: int, max_depth: int = 10000) -> DataFrame:
@@ -27,8 +28,6 @@ def bfs_distances(edges: DataFrame, source: int, max_depth: int = 10000) -> Data
     onto the checkpoint leaf (the frontier is re-derived as
     ``dist == depth`` rather than kept as its own chained DataFrame,
     which would otherwise carry the uncut history across cut points)."""
-    from ..plans.superstep import cut_lineage, release
-
     spark = edges.sparkSession
     adj = edges.select("src", "dst").repartition("src").persist()
     adj.count()
@@ -128,7 +127,8 @@ def double_sweep_diameter(edges: DataFrame, max_depth: int = 10000) -> DataFrame
 
     Scale shape: exactly two bfs_distances runs (frontier supersteps with
     the every-3-depths lineage cut) plus three tiny driver reductions —
-    no new shuffle machinery."""
+    no new shuffle machinery.  Both distance tables are released once
+    the bound is read."""
     sym = edges.select("src", "dst").union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).filter(F.col("src") != F.col("dst")).distinct()
@@ -139,9 +139,11 @@ def double_sweep_diameter(edges: DataFrame, max_depth: int = 10000) -> DataFrame
     far = (
         d1.orderBy(F.col("dist").desc(), F.col("v").asc()).limit(1).collect()[0]
     )
+    release(d1)
     s2 = int(far["v"])
     d2 = bfs_distances(sym, s2, max_depth)
     bound = d2.agg(F.max("dist")).collect()[0][0]
+    release(d2)
     spark = edges.sparkSession
     return spark.createDataFrame(
         [(int(s1), s2, int(bound))],

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.superstep import iterate, release
+
 
 def weighted_sssp(
     edges: DataFrame, source: int, max_rounds: int = 10000
@@ -37,26 +39,20 @@ def weighted_sssp(
     over directed weighted edges (src, dst, weight); symmetrize upstream
     for undirected semantics.
 
-    Lineage discipline (see operators/paths.py:18): each round reads the
-    previous state twice (frontier filter + full-outer fold), so the
-    uncut plan doubles per round — every 3 rounds the state is rebased
-    onto an eager ``cut_lineage`` leaf and the frontier re-derived as
-    ``hops == round`` from that leaf; superseded persisted states are
-    released only once a lineage-free successor has materialized
-    (the deferred-release window).
+    Runs on ``plans.superstep.iterate`` at cadence 3: each round reads
+    the previous state twice (frontier filter + full-outer fold), so the
+    uncut plan doubles per round; every third round is a lineage cut,
+    the frontier is always re-derived as ``hops == round`` from the held
+    state, and ``iterate`` owns the deferred release of the persisted
+    rounds in between.  Raises ``RuntimeError`` if ``max_rounds`` pass
+    and a distance still improves.
     """
-    from ..plans.superstep import cut_lineage, release
-
     spark = edges.sparkSession
     adj = edges.select("src", "dst", "weight").repartition("src").persist()
     adj.count()
-    dist = spark.createDataFrame(
-        [(int(source), 0.0, 0)], "v long, dist double, hops int"
-    ).persist()
-    rnd = 0
-    window: list = []
-    while rnd < max_rounds:
-        rnd += 1
+
+    def step(dist: DataFrame, i: int):
+        rnd = i + 1
         frontier = dist.filter(F.col("hops") == rnd - 1)
         best = (
             adj.join(frontier, adj.src == frontier.v)
@@ -85,33 +81,26 @@ def weighted_sssp(
                 .alias("hops"),
             )
         )
-        if rnd % 3 == 0:
-            new_dist = cut_lineage(new_dist)  # eager: lineage-free leaf
-            for p in (*window, dist):
-                release(p)
-            window.clear()
-        else:
-            new_dist = new_dist.persist()
-            window.append(dist)
-        # one action per round: materializes new_dist AND counts improved
-        n_improved = new_dist.agg(
-            F.sum((F.col("hops") == rnd).cast("long")).alias("n")
-        ).collect()[0][0]
-        dist = new_dist
-        if not n_improved:
-            break
-    else:
+        aggs = [
+            F.sum((F.col("hops") == rnd).cast("long")).alias("n"),
+            F.count("*").alias("rows"),
+        ]
+        return new_dist, aggs, measure
+
+    def measure(row):
+        return int(row["n"] or 0), row["rows"]
+
+    dist0 = spark.createDataFrame(
+        [(int(source), 0.0, 0)], "v long, dist double, hops int"
+    )
+    result = iterate(dist0, step, max_iter=max_rounds, checkpoint_every=3)
+    adj.unpersist()
+    if not result.converged:
+        release(result.state)
         raise RuntimeError(
             f"weighted_sssp did not converge in {max_rounds} rounds "
             "(negative edge weights, or raise max_rounds)"
         )
-    if window:
-        prev_state = dist
-        dist = cut_lineage(dist)
-        for p in (*window, prev_state):
-            release(p)
-        window.clear()
-    adj.unpersist()
     # the termination round improved nothing, so every hops value is the
     # round its dist was finalized; the source keeps hops = 0
-    return dist
+    return result.state

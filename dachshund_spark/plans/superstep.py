@@ -1,7 +1,8 @@
 """Superstep driver loop with lineage control, per-superstep checkpoints,
 and metrics — the iterative backbone under PageRank / connected components /
 label propagation / eigenvector centrality / coreness / SCC labels / the
-k-core, k-truss and trussness peels.
+k-core, k-truss and trussness peels / the Kahn peel (topological levels and
+the SCC trim) / the acyclicity sink strip / weighted SSSP.
 
 Spark has no native iterate-to-fixpoint, so iterative algorithms are driver
 loops where every iteration appends to the logical plan.  Unchecked, plan

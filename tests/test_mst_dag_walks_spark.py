@@ -74,15 +74,21 @@ def test_topological_levels_diamond(spark):
 
 def test_topological_levels_respects_all_edges(spark):
     rng = random.Random(3)
-    dag = sorted(
-        {(a, b) for _ in range(300)
-         for a, b in [sorted(rng.sample(range(60), 2))]}
-    )
-    got = {r.v: r.level for r in
-           topological_levels(_edges_df(spark, dag)).collect()}
-    assert got == K.kahn_levels(dag)
-    for s, t in dag:  # every edge strictly increases the level
-        assert got[s] < got[t]
+    shapes = [
+        sorted(
+            {(a, b) for _ in range(300)
+             for a, b in [sorted(rng.sample(range(60), 2))]}
+        ),
+        # 4 reaches in-degree 0 only after 1, 2 and 3 are peeled in turn
+        [(1, 2), (2, 3), (3, 4), (1, 4), (2, 4)],
+        [],  # empty edge table
+    ]
+    for dag in shapes:
+        got = {r.v: r.level for r in
+               topological_levels(_edges_df(spark, dag)).collect()}
+        assert got == K.kahn_levels(dag)
+        for s, t in dag:  # every edge strictly increases the level
+            assert got[s] < got[t]
 
 
 def test_topological_levels_cycle_raises(spark):
@@ -91,6 +97,9 @@ def test_topological_levels_cycle_raises(spark):
     # cycle reachable only downstream of settled layers still detected
     with pytest.raises(ValueError, match="cycle"):
         topological_levels(_edges_df(spark, [(0, 1), (1, 2), (2, 1)]))
+    # a self-loop-only vertex never reaches in-degree 0
+    with pytest.raises(ValueError, match="cycle"):
+        topological_levels(_edges_df(spark, [(0, 1), (5, 5)]))
 
 
 # --------------------------------------------------------------------------

@@ -395,9 +395,14 @@ def test_distributed_scc(spark):
     shapes.append(
         list({(rng.randint(1, 30), rng.randint(1, 30)) for _ in range(80)})
     )
+    # 4 and then 7 become trimmable only once the peel settles {1, 2, 3}
+    shapes.append([(1, 2), (2, 3), (3, 1), (3, 4), (4, 7), (7, 5), (5, 6), (6, 5)])
+    # self-loop-only vertices (9, 12) are singleton SCCs
+    shapes.append([(9, 9), (1, 2), (2, 1), (2, 12), (12, 12)])
+    # empty edge table
+    shapes.append([])
 
     for edge_list in shapes:
-        edge_list = [(u, v) for u, v in edge_list if u != v]
         got = {
             r["v"]: r["component"]
             for r in dist_scc(B.edges_df(spark, edge_list), max_outer=60).collect()

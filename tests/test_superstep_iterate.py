@@ -1,17 +1,27 @@
 """``plans.superstep.iterate`` on a toy countdown: every round maps
 x -> max(x - 1, 0) over ``spark.range(n)``, so round r changes the n - r
 rows with x >= r and the loop converges on round n.  Choosing n against
-the cadence places convergence on a seal round or mid-window."""
+the cadence places convergence on a seal round or mid-window.  Also: the
+operators built on cut states leave no persisted RDD behind."""
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dachshund_spark.operators.builders import edges_df
+from dachshund_spark.operators.components import (
+    is_acyclic,
+    strongly_connected_components,
+)
+from dachshund_spark.operators.dag import topological_levels
+from dachshund_spark.operators.paths import double_sweep_diameter
 from dachshund_spark.plans.superstep import (
     CheckpointManager,
     SuperstepMetrics,
     iterate,
     release,
 )
+from tests.fixtures import KARATE_CLUB_EDGES
 
 
 def _python_countdown(n, max_iter):
@@ -114,3 +124,41 @@ def test_torn_commit_is_not_resumed(spark, tmp_path):
     # one is committed
     cp.save(df, SuperstepMetrics(superstep=3))
     assert cp.latest()[0] == 2
+
+
+# a trim layer on each side of two cycles, so the SCC runs both phases
+_SCC_EDGES = [(0, 1), (1, 2), (2, 1), (2, 3), (3, 4), (4, 5), (5, 3), (5, 6)]
+
+
+@pytest.mark.parametrize(
+    "op, edges",
+    [
+        (topological_levels, KARATE_CLUB_EDGES),
+        (is_acyclic, KARATE_CLUB_EDGES),
+        (strongly_connected_components, _SCC_EDGES),
+        (double_sweep_diameter, KARATE_CLUB_EDGES),
+    ],
+    ids=[
+        "topological_levels",
+        "is_acyclic",
+        "strongly_connected_components",
+        "double_sweep_diameter",
+    ],
+)
+def test_operators_leave_only_their_output_cut(spark, op, edges):
+    """An operator built on cut/persist states leaves nothing persisted
+    behind but the cut its returned frame reads, and ``release`` of that
+    frame frees it."""
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keySet())
+    out = op(edges_df(spark, edges))
+    own = set()
+    if isinstance(out, DataFrame):
+        out.collect()
+        if getattr(out, "_cut_rdd", None) is not None:
+            own = {out._cut_rdd.id()}
+    left = set(sc._jsc.getPersistentRDDs().keySet()) - before
+    assert left <= own, left
+    if isinstance(out, DataFrame):
+        release(out)
+    assert set(sc._jsc.getPersistentRDDs().keySet()) <= before
