@@ -123,7 +123,8 @@ def bowtie_decomposition(
     in_reach = _reach_from(rev, core, max_depth)
     release(rev)
 
-    wcc = cut_lineage(weakly_connected_components(e))
+    # a projection of the label state, which release(wcc) frees
+    wcc = weakly_connected_components(e)
     # the weak component CONTAINING the core (not merely the largest):
     # Broder's DISCONNECTED is "not weakly connected to the core".  The
     # core's min vertex pins it deterministically in one tiny action.

@@ -7,23 +7,22 @@
 
 * ``betweenness`` — Brandes, parallelized over sources
   (betweenness.rs:57-96; the reference loops sources sequentially).  The
-  canonical edge table is written ONCE to a parquet scratch path and read
-  inside each task (pyarrow) — the edge list never round-trips through
-  the driver, so driver memory stays O(1) in the graph size.  Each task
-  runs the pure-Python Brandes kernel for its slice of sources over a
-  shared in-process adjacency, emitting (v, dependency) partials that a
-  final groupBy sums.  The default is the reference featurizer's
+  driver collects the canonical edge list once (Arrow), builds a dense
+  CSR (ids, indptr, int32 neighbours) and broadcasts it; each task runs
+  the numpy CSR Brandes kernel for its slice of sources, emitting
+  (v, dependency) partials that a final groupBy sums.  A source whose
+  shortest-path counts outgrow exact float64 is redone with the bigint
+  dict kernel over the same arrays.  ``edge_budget`` bounds the driver
+  and per-worker memory.  The default is the reference featurizer's
   approximation — 100 sampled sources when the graph has more than 100
   vertices (simple_transformer.rs:46-52) — because exact betweenness is
   inherently O(VE); pass ``max_sources=None`` for exact.
+  ``betweenness_superstep`` keeps the graph distributed instead.
 """
 
 from __future__ import annotations
 
 import hashlib
-import os
-import tempfile
-import uuid
 from typing import Iterator
 
 import pandas as pd
@@ -31,8 +30,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.superstep import cut_lineage, iterate
-from .builders import symmetrized, vertices
+from ..plans.superstep import cut_lineage, iterate, project
+from .builders import canonical_undirected, symmetrized, vertices
 
 
 def eigenvector_centrality(
@@ -93,10 +92,10 @@ def eigenvector_centrality(
     result = iterate(state0, step, max_iter=max_iter, tol=eps)
     if result.converged:
         # stop fired on the lagged delta: xprev IS the converged vector
-        out = result.state.select("v", F.col("xprev").alias("evcent"))
+        out = project(result.state, "v", F.col("xprev").alias("evcent"))
     else:
-        out = result.state.select(
-            "v", (F.col("y") / F.lit(scale["m"])).alias("evcent")
+        out = project(
+            result.state, "v", (F.col("y") / F.lit(scale["m"])).alias("evcent")
         )
     adj.unpersist()
     return out
@@ -206,19 +205,6 @@ def _brandes_csr(indptr, nbrs, n, s, delta_out):
     return float(sigma[order[:tail]].max())
 
 
-def _hadoop_delete(spark, path: str) -> None:
-    """Delete a scratch path through the Hadoop FileSystem API — resolves
-    the path's own scheme, so it works for local dirs AND cluster URIs
-    (HDFS/S3/shared FS), unlike a driver-side ``shutil.rmtree``."""
-    try:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(hpath, True)
-    except Exception:  # pragma: no cover - JVM gone / permissions
-        pass
-
-
 def _select_sources(spark, verts, sources, max_sources, seed):
     if sources is not None:
         return spark.createDataFrame(
@@ -231,6 +217,16 @@ def _select_sources(spark, verts, sources, max_sources, seed):
             .select(F.col("v").alias("source"))
         )
     return verts.select(F.col("v").alias("source"))
+
+
+def _over_budget(n_edges, edge_budget: int) -> RuntimeError:
+    return RuntimeError(
+        f"betweenness: {n_edges} canonical edges exceed the adjacency "
+        f"budget ({edge_budget}); the driver and every Python worker hold "
+        "the full edge list, so this would exhaust their memory.  Either "
+        "raise edge_budget (if they have the memory) or use "
+        "betweenness_superstep(), which keeps the graph distributed"
+    )
 
 
 def betweenness(
@@ -249,33 +245,30 @@ def betweenness(
       from a deterministic md5-ranked sample (the reference featurizer's
       100-source approximation, simple_transformer.rs:46-52).  ``None``
       means every vertex (exact).
-    * ``scratch_dir`` — where the canonical edge table is staged as
-      parquet for task-side reads.  MUST be a cluster-visible path
-      (HDFS/S3/shared FS) on a real cluster; defaults to a local temp dir,
-      correct for local[*] mode.
-    * ``edge_budget`` — every task loads the FULL canonical edge list into
-      an in-process adjacency (that is what makes source-parallel Brandes
-      fast).  Above this many edges that per-task load would OOM an
-      executor, so the call fails fast with guidance instead of melting
-      the cluster; ``betweenness_superstep`` is the giant-graph fallback.
-    """
-    spark = edges.sparkSession
-    from ..operators.builders import canonical_undirected
+    * ``scratch_dir`` — unused, kept so existing callers still work:
+      nothing is staged on a filesystem.
+    * ``edge_budget`` — the driver collects the canonical edge list and
+      every Python worker holds the whole CSR (that is what makes
+      source-parallel Brandes fast).  Above this many edges the call
+      fails fast with guidance instead of exhausting memory;
+      ``betweenness_superstep`` is the giant-graph fallback.
 
-    master = spark.sparkContext.master
-    if scratch_dir is None and not master.startswith("local"):
-        raise ValueError(
-            "betweenness on a non-local cluster requires scratch_dir to be "
-            "a cluster-visible path (HDFS/S3/shared FS); the local tempdir "
-            f"default would fail task-side reads under master={master!r}"
-        )
-    canon = canonical_undirected(edges)
-    # cheap PRE-write guard: HLL-approximate the canonical pair count with
-    # a single scan + partial aggregate (no shuffle write), so a clearly
-    # over-budget graph fails before paying the full distributed parquet
-    # stage the exact check below sits behind.  The 1.2 slack covers the
-    # ~5% HLL rsd; borderline graphs fall through to the exact post-write
-    # count, which remains authoritative.
+    Memory is O(``edge_budget``) on the driver and in each Python worker.
+    The driver's Python process peaks at ~110 bytes per canonical edge
+    (the collected pairs plus the CSR build's sort; measured at 2M edges
+    over 0.1M and 1.9M vertices).  The CSR itself is 8 bytes per edge
+    plus 16 per vertex: the driver JVM holds that much as broadcast
+    blocks, and every Python worker that runs a task holds one copy.
+    """
+    import numpy as np
+
+    spark = edges.sparkSession
+    sc = spark.sparkContext
+    # cheap guard before anything is collected: HLL-approximate the
+    # canonical pair count with a single scan + partial aggregate, so a
+    # clearly over-budget graph fails without shipping its edges to the
+    # driver.  The 1.2 slack covers the ~5% HLL rsd; borderline graphs
+    # fall through to the exact count below, which remains authoritative.
     approx_edges = (
         edges.select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
@@ -285,95 +278,31 @@ def betweenness(
         .collect()[0]["n"]
     )
     if approx_edges > 1.2 * edge_budget:
-        raise RuntimeError(
-            f"betweenness: ~{approx_edges} canonical edges (approximate) "
-            f"exceed the per-task adjacency budget ({edge_budget}); every "
-            "task materializes the full edge list, so this would OOM "
-            "executors.  Either raise edge_budget (if executors have the "
-            "memory) or use betweenness_superstep(), which keeps the "
-            "graph distributed"
-        )
-    root = scratch_dir or os.path.join(tempfile.gettempdir(), "dachshund_bet")
-    path = os.path.join(root, f"edges-{uuid.uuid4().hex}")
-    # everything from the scratch write onward sits inside try/finally so a
-    # failure in ANY stage (write, budget check, sampling, the mapInPandas
-    # job) still deletes the edges-<uuid> directory — via the Hadoop FS
-    # API, which unlike shutil also works when scratch_dir is a remote URI
+        raise _over_budget(f"~{approx_edges} (approximate)", edge_budget)
+    pairs = canonical_undirected(edges).toPandas()
+    if len(pairs) > edge_budget:
+        raise _over_budget(len(pairs), edge_budget)
+    ids, indptr, nbrs = _csr_from_canonical(
+        pairs["src"].to_numpy(), pairs["dst"].to_numpy()
+    )
+    del pairs
+    # int32 neighbours: dense ids < |V| <= 2 * edges, < 2^31 for any
+    # edge_budget below 2^30
+    csr = sc.broadcast((ids, indptr, nbrs.astype(np.int32)))
+    # read here: the tasks see the bound as it was at call time
+    bound = _SIGMA_EXACT_BOUND
     try:
-        canon.write.mode("overwrite").parquet(path)
-        canon = spark.read.parquet(path)
-        # budget check AFTER the scratch write: counting the written
-        # parquet is a footer-metadata scan, whereas counting `canon`
-        # directly would compute the whole canonicalization shuffle a
-        # second time.  Still fails fast — nothing has launched the
-        # per-task adjacency load (the mapInPandas job) yet.
-        n_edges = canon.count()
-        if n_edges > edge_budget:
-            raise RuntimeError(
-                f"betweenness: {n_edges} canonical edges exceed the "
-                f"per-task adjacency budget ({edge_budget}); every task "
-                "materializes the full edge list, so this would OOM "
-                "executors.  Either raise edge_budget (if executors have "
-                "the memory) or use betweenness_superstep(), which keeps "
-                "the graph distributed"
-            )
-
-        verts = vertices(canon)
+        verts = spark.createDataFrame(pd.DataFrame({"v": ids}), "v long")
         src_df = _select_sources(spark, verts, sources, max_sources, seed)
-        n_part = max(spark.sparkContext.defaultParallelism, 8)
+        n_part = max(sc.defaultParallelism, 8)
         src_df = src_df.repartition(n_part)
-
-        def _build_csr_shared(_):
-            """One task builds the CSR ONCE and publishes it as .npy files
-            next to the scratch parquet; every source task then mmap-loads
-            the shared read-only arrays instead of re-deriving the same
-            CSR from parquet N-tasks times (at 32 concurrent workers the
-            redundant builds were memory-bandwidth-bound, not CPU-bound).
-            Best-effort: a scratch FS numpy cannot address (object-store
-            URI) simply leaves the files absent and tasks fall back."""
-            import numpy as np
-            import pyarrow.parquet as pq
-
-            try:
-                tbl = pq.read_table(path, columns=["src", "dst"])
-                ids, indptr, nbrs = _csr_from_canonical(
-                    tbl["src"].to_numpy(), tbl["dst"].to_numpy()
-                )
-                np.save(os.path.join(path, "_csr_ids.npy"), ids)
-                np.save(os.path.join(path, "_csr_indptr.npy"), indptr)
-                np.save(
-                    os.path.join(path, "_csr_nbrs.npy"),
-                    nbrs.astype(np.int32),
-                    # int32 is always safe: dense ids < 2 * edge_budget
-                )
-                return [True]
-            except Exception:
-                return [False]
-
-        spark.sparkContext.parallelize([0], 1).mapPartitions(
-            _build_csr_shared
-        ).count()
 
         def run_sources(
             batches: Iterator[pd.DataFrame],
         ) -> Iterator[pd.DataFrame]:
             import numpy as np
-            import pyarrow.parquet as pq
 
-            src_a = dst_a = None
-            try:
-                ids = np.load(os.path.join(path, "_csr_ids.npy"), mmap_mode="r")
-                indptr = np.load(
-                    os.path.join(path, "_csr_indptr.npy"), mmap_mode="r"
-                )
-                nbrs = np.load(
-                    os.path.join(path, "_csr_nbrs.npy"), mmap_mode="r"
-                )
-            except Exception:
-                tbl = pq.read_table(path, columns=["src", "dst"])
-                src_a = tbl["src"].to_numpy()
-                dst_a = tbl["dst"].to_numpy()
-                ids, indptr, nbrs = _csr_from_canonical(src_a, dst_a)
+            ids, indptr, nbrs = csr.value
             acc = np.zeros(len(ids))
             fallback_adj = None
             ran = False
@@ -383,31 +312,23 @@ def betweenness(
                     si = int(np.searchsorted(ids, int(s)))
                     before = acc.copy()
                     max_sigma = _brandes_csr(indptr, nbrs, len(ids), si, acc)
-                    if max_sigma >= _SIGMA_EXACT_BOUND:
+                    if max_sigma >= bound:
                         # path counts outgrew exact float64: redo this
                         # source with the bigint dict kernel (slow, exact)
-                        from ..functions.kernels import (
-                            brandes_single_source,
-                            build_undirected_adj,
-                        )
+                        from ..functions.kernels import brandes_single_source
 
                         if fallback_adj is None:
-                            if src_a is None:
-                                t = pq.read_table(path, columns=["src", "dst"])
-                                sa, da = (
-                                    t["src"].to_numpy(), t["dst"].to_numpy()
+                            fallback_adj = {
+                                int(x): set(
+                                    ids[nbrs[indptr[i]:indptr[i + 1]]].tolist()
                                 )
-                            else:
-                                sa, da = src_a, dst_a
-                            fallback_adj = build_undirected_adj(
-                                list(zip(sa.tolist(), da.tolist()))
-                            )
+                                for i, x in enumerate(ids)
+                            }
                         acc = before
-                        dense = {int(x): i for i, x in enumerate(ids)}
                         for nid, dep in brandes_single_source(
                             fallback_adj, int(s)
                         ).items():
-                            acc[dense[nid]] += dep
+                            acc[np.searchsorted(ids, nid)] += dep
             if ran:
                 nz = np.nonzero(acc)[0]
                 # zero-dependency vertices are restored by the caller's
@@ -422,10 +343,10 @@ def betweenness(
             "v", F.coalesce("betweenness", F.lit(0.0)).alias("betweenness")
         )
         # the result is small (one row per vertex): materialize it eagerly
-        # so the scratch parquet can be deleted before returning
+        # so the broadcast can be destroyed before returning
         return cut_lineage(out)
     finally:
-        _hadoop_delete(spark, path)
+        csr.destroy()
 
 
 def betweenness_superstep(

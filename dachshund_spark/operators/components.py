@@ -30,6 +30,7 @@ from ..plans.superstep import (
     CheckpointManager,
     cut_lineage,
     iterate,
+    project,
     release,
     superstep_state_side,
 )
@@ -105,7 +106,9 @@ def connected_components(
         checkpointer=checkpointer,
         start_iteration=start_iteration,
     )
+    adj.unpersist()
     if not result.converged:
+        release(result.state)
         # silent truncation would return labels that are NOT constant per
         # component — callers could not tell a wrong answer from a right
         # one.  High-diameter graphs should raise max_iter or use
@@ -115,8 +118,7 @@ def connected_components(
             f"supersteps (last delta {result.metrics[-1].delta if result.metrics else '?'}); "
             "raise max_iter or use connected_components_two_phase"
         )
-    out = result.state.select("v", "component")
-    adj.unpersist()
+    out = project(result.state, "v", "component")
     if include_metrics:
         return out, result
     return out

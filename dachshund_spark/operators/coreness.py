@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from ..plans.superstep import (
     cut_lineage,
     iterate,
+    project,
     release,
     superstep_state_side,
 )
@@ -125,7 +126,7 @@ def k_core_vertices(edges: DataFrame, k: int, max_rounds: int = 1000) -> DataFra
     if not result.converged:
         release(result.state)
         raise RuntimeError(f"k_core_vertices: not converged in {max_rounds} rounds")
-    return result.state.select("v")
+    return project(result.state, "v")
 
 
 def k_core_components(edges: DataFrame, k: int) -> DataFrame:
@@ -310,7 +311,7 @@ def coreness(
     if not result.converged:
         release(result.state)
         raise RuntimeError("coreness h-index iteration did not converge")
-    return result.state.select("v", F.col("est").cast("int").alias("coreness"))
+    return project(result.state, "v", F.col("est").cast("int").alias("coreness"))
 
 
 def coreness_peel(edges: DataFrame, max_rounds: int = 10000) -> DataFrame:
@@ -661,12 +662,12 @@ def k_truss_edges(edges: DataFrame, k: int, max_rounds: int = 1000) -> DataFrame
         return n_drop, n_edges
 
     if measure(state.agg(*aggs).collect()[0])[0] == 0:
-        return state.select("src", "dst")
+        return project(state, "src", "dst")
     result = iterate(state, step, max_iter=max_rounds, checkpoint_every=1)
     if not result.converged:
         release(result.state)
         raise RuntimeError(f"k_truss_edges: not converged in {max_rounds} rounds")
-    return result.state.select("src", "dst")
+    return project(result.state, "src", "dst")
 
 
 def trussness(edges: DataFrame, max_rounds: int = 10000) -> DataFrame:

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.superstep import iterate, release
+from ..plans.superstep import iterate, project, release
 from .builders import vertices
 
 
@@ -123,7 +123,4 @@ def topological_levels(edges: DataFrame, max_rounds: int = 100000) -> DataFrame:
             "never reach in-degree 0 (cf. is_acyclic, "
             "simple_directed_graph.rs:25-43)"
         )
-    out = state.select("v", "level")
-    # the caller's release(out) frees the peel's sealed state
-    out._cut_rdd = getattr(state, "_cut_rdd", None)
-    return out
+    return project(state, "v", "level")

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.superstep import CheckpointManager, iterate
+from ..plans.superstep import CheckpointManager, iterate, project
 from .builders import symmetrized, vertices
 
 
@@ -73,7 +73,7 @@ def label_propagation(
     result = iterate(
         state0, step, max_iter=max_iter, tol=0.0, checkpointer=checkpointer
     )
-    out = result.state.select("v", "label")
+    out = project(result.state, "v", "label")
     adj.unpersist()
     if include_metrics:
         return out, result

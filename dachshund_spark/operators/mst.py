@@ -113,12 +113,15 @@ def minimum_spanning_forest(
         merge_labels = connected_components(
             picks.select(F.col("c").alias("src"), F.col("oc").alias("dst")),
             max_iter=max_rounds,
-        ).withColumnsRenamed({"v": "c", "component": "nc"})
-        new_comp = cut_lineage(
-            comp.join(merge_labels, "c", "left").select(
-                "v", F.coalesce("nc", "c").alias("c")
-            )
         )
+        new_comp = cut_lineage(
+            comp.join(
+                merge_labels.withColumnsRenamed({"v": "c", "component": "nc"}),
+                "c",
+                "left",
+            ).select("v", F.coalesce("nc", "c").alias("c"))
+        )
+        release(merge_labels)
         # crossing (minus the now-internal edges) is the next round's
         # edge set: already endpoint-labeled rows are re-labeled next
         # round anyway, so keep only the raw columns

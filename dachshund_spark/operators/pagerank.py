@@ -43,7 +43,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.superstep import CheckpointManager, iterate
+from ..plans.superstep import CheckpointManager, iterate, project
 from .builders import vertices
 
 
@@ -272,7 +272,7 @@ def pagerank(
         start_iteration=start_iteration,
         checkpoint_every=checkpoint_every,
     )
-    out = result.state.select("v", F.col("rank").alias("pagerank"))
+    out = project(result.state, "v", F.col("rank").alias("pagerank"))
     links.unpersist()
     verts.unpersist()
     if include_metrics:

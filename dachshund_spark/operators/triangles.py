@@ -28,13 +28,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .builders import canonical_undirected, degrees
+from ..plans.superstep import cut_lineage, release
+from .builders import canonical_undirected
 
 
-def _oriented(edges: DataFrame) -> DataFrame:
+def _degrees(canon: DataFrame) -> DataFrame:
+    """DataFrame[v, degree] of canonical edges: each row is already one
+    distinct undirected edge, so nothing is re-canonicalized."""
+    return (
+        canon.select(F.col("src").alias("v"))
+        .union(canon.select(F.col("dst").alias("v")))
+        .groupBy("v")
+        .agg(F.count("*").alias("degree"))
+    )
+
+
+def _oriented(canon: DataFrame, deg: DataFrame) -> DataFrame:
     """Canonical edges re-oriented from lower (degree, id) to higher."""
-    canon = canonical_undirected(edges)
-    deg = degrees(canon)
     e = (
         canon.join(deg.withColumnRenamed("v", "src"), "src")
         .withColumnRenamed("degree", "deg_src")
@@ -52,23 +62,13 @@ def _oriented(edges: DataFrame) -> DataFrame:
     )
 
 
-def triangle_triples(edges: DataFrame) -> DataFrame:
-    """One row (x, y, z) per distinct triangle.
-
-    The result is MATERIALIZED (lineage-cut leaf): every consumer fans
-    the triple set into several projections (corner explosion, per-edge
-    explosion), and a lazy plan would re-run the wedge join — and
-    re-build its broadcast hash maps — once per branch.  The cut also
-    lets the oriented intermediate be unpersisted before returning."""
-    from ..plans.superstep import cut_lineage
-
-    o = _oriented(edges).persist()
+def _triples(canon: DataFrame, deg: DataFrame) -> DataFrame:
+    """``triangle_triples`` of canonical edges with their degrees."""
+    o = _oriented(canon, deg).persist()
     e1 = o.select(F.col("a"), F.col("b").alias("u"))
     e2 = o.select(F.col("a"), F.col("b").alias("w"))
     wedges = e1.join(e2, "a").filter(F.col("u") < F.col("w"))
-    closing = canonical_undirected(edges).select(
-        F.col("src").alias("u"), F.col("dst").alias("w")
-    )
+    closing = canon.select(F.col("src").alias("u"), F.col("dst").alias("w"))
     tri = cut_lineage(
         wedges.join(closing, ["u", "w"]).select(
             F.col("a").alias("x"), F.col("u").alias("y"), F.col("w").alias("z")
@@ -78,28 +78,46 @@ def triangle_triples(edges: DataFrame) -> DataFrame:
     return tri
 
 
-def triangle_counts(edges: DataFrame) -> DataFrame:
-    """DataFrame[v, triangles] — triangles touching each vertex; vertices in
-    no triangle appear with 0 (cf. transitivity.rs:20-34)."""
-    tri = triangle_triples(edges)
+def _with_triangles(deg: DataFrame, tri: DataFrame) -> DataFrame:
+    """DataFrame[v, degree, triangles]: ``deg`` plus the number of
+    triples in ``tri`` touching each vertex (0 when none does)."""
     corners = (
         tri.select(F.col("x").alias("v"))
         .union(tri.select(F.col("y").alias("v")))
         .union(tri.select(F.col("z").alias("v")))
     )
     counts = corners.groupBy("v").agg(F.count("*").alias("triangles"))
-    verts = degrees(edges).select("v")
-    return verts.join(counts, "v", "left").select(
-        "v", F.coalesce("triangles", F.lit(0)).alias("triangles")
+    return deg.join(counts, "v", "left").select(
+        "v", "degree", F.coalesce("triangles", F.lit(0)).alias("triangles")
     )
+
+
+def triangle_triples(edges: DataFrame) -> DataFrame:
+    """One row (x, y, z) per distinct triangle.
+
+    The result is MATERIALIZED (lineage-cut leaf): every consumer fans
+    the triple set into several projections (corner explosion, per-edge
+    explosion), and a lazy plan would re-run the wedge join — and
+    re-build its broadcast hash maps — once per branch.  The cut also
+    lets the oriented intermediate be unpersisted before returning."""
+    canon = canonical_undirected(edges)
+    return _triples(canon, _degrees(canon))
+
+
+def triangle_counts(edges: DataFrame) -> DataFrame:
+    """DataFrame[v, triangles] — triangles touching each vertex; vertices in
+    no triangle appear with 0 (cf. transitivity.rs:20-34)."""
+    canon = canonical_undirected(edges)
+    deg = _degrees(canon)
+    return _with_triangles(deg, _triples(canon, deg)).select("v", "triangles")
 
 
 def clustering_coefficients(edges: DataFrame) -> DataFrame:
     """DataFrame[v, degree, coefficient] with coefficient = 2*tri/(d*(d-1));
     null when degree <= 1 (cf. clustering.rs:20-39)."""
-    deg = degrees(edges)
-    tri = triangle_counts(edges)
-    return deg.join(tri, "v").select(
+    canon = canonical_undirected(edges)
+    deg = _degrees(canon)
+    return _with_triangles(deg, _triples(canon, deg)).select(
         "v",
         "degree",
         F.when(
@@ -120,23 +138,17 @@ def avg_clustering(edges: DataFrame) -> float:
 
 def transitivity(edges: DataFrame) -> float:
     """3*T / #triples (cf. transitivity.rs:43-51)."""
-    tri_total = triangle_triples(edges).count()
-    triples = (
-        degrees(edges)
-        .agg(F.sum(F.col("degree") * (F.col("degree") - 1) / 2).alias("t"))
-        .collect()[0]["t"]
-    )
-    return 3.0 * tri_total / triples
+    return global_stats(edges)["transitivity"]
 
 
 def global_stats(edges: DataFrame) -> dict:
     """One-pass summary: vertices, edges, triangles, transitivity,
-    avg clustering."""
+    avg clustering.  The canonical, degree and oriented tables are each
+    built once, and nothing stays persisted after the call."""
     canon = canonical_undirected(edges).persist()
-    deg = degrees(canon).persist()
-    tri = triangle_counts(canon)
-    joined = deg.join(tri, "v")
-    agg = joined.agg(
+    deg = _degrees(canon).persist()
+    tri = _triples(canon, deg)
+    agg = _with_triangles(deg, tri).agg(
         F.count("*").alias("vertices"),
         (F.sum("degree") / 2).alias("edges"),
         (F.sum("triangles") / 3).alias("triangles"),
@@ -148,7 +160,10 @@ def global_stats(edges: DataFrame) -> dict:
             )
         ).alias("avg_clustering"),
     ).collect()[0]
-    out = {
+    release(tri)
+    canon.unpersist()
+    deg.unpersist()
+    return {
         "vertices": agg["vertices"],
         "edges": int(agg["edges"]),
         "triangles": int(agg["triangles"]),
@@ -157,6 +172,3 @@ def global_stats(edges: DataFrame) -> dict:
         else float("nan"),
         "avg_clustering": agg["avg_clustering"],
     }
-    canon.unpersist()
-    deg.unpersist()
-    return out

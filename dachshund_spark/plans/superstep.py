@@ -159,6 +159,16 @@ def release(df: DataFrame | None) -> None:
         pass
 
 
+def project(state: DataFrame, *cols) -> DataFrame:
+    """``state.select(*cols)`` that keeps ``state``'s release handle, so
+    the caller's ``release(out)`` frees the sealed state the projection
+    reads.  The way an operator returns columns of ``iterate``'s
+    ``result.state`` (or any ``cut_lineage`` product)."""
+    out = state.select(*cols)
+    out._cut_rdd = getattr(state, "_cut_rdd", None)
+    return out
+
+
 @dataclass
 class SuperstepMetrics:
     """One round's record.  ``seconds`` is the round's wall time, the
@@ -290,7 +300,8 @@ def iterate(
     caller already did) and releases every superseded state itself.  The
     returned ``result.state`` is always sealed — a cut leaf, or the lazy
     parquet reread of the last durable step — so the caller frees it with
-    one ``release(result.state)`` once nothing reads it any more.
+    one ``release(result.state)`` once nothing reads it any more, or
+    returns a ``project`` of it whose ``release`` does the same.
     """
     if start_iteration > 0 and start_iteration >= max_iter:
         # a resumed checkpoint already at/past the iteration bound would

@@ -267,6 +267,31 @@ def test_betweenness_edge_budget_and_superstep_fallback(spark):
     assert all(abs(got_s[v] - exact_s[v]) <= 1e-6 for v in exact_s)
 
 
+def test_betweenness_bigint_fallback_is_bit_equal(spark, monkeypatch):
+    """A source whose path counts reach ``_SIGMA_EXACT_BOUND`` is redone
+    with the bigint dict kernel over the broadcast CSR.  Forcing the
+    bound to 1.0 sends every source there; the output is bit-equal to
+    the float64 CSR path."""
+    from dachshund_spark.operators import centrality
+
+    e = B.edges_df(spark, KARATE_CLUB_EDGES)
+    fast = {r["v"]: r["betweenness"] for r in centrality.betweenness(e).collect()}
+    monkeypatch.setattr(centrality, "_SIGMA_EXACT_BOUND", 1.0)
+    exact = {r["v"]: r["betweenness"] for r in centrality.betweenness(e).collect()}
+    assert exact == fast
+
+
+def test_betweenness_writes_no_scratch_files(spark, tmp_path):
+    """The CSR reaches the tasks by broadcast: ``scratch_dir`` is
+    accepted and stays empty."""
+    from dachshund_spark.operators.centrality import betweenness
+
+    e = B.edges_df(spark, KARATE_CLUB_EDGES)
+    out = betweenness(e, sources=[1, 2, 3], scratch_dir=str(tmp_path))
+    assert out.count() == 34
+    assert list(tmp_path.iterdir()) == []
+
+
 def test_distributed_weighted_coreness(spark):
     from dachshund_spark.operators.builders import weighted_canonical
     from dachshund_spark.operators.coreness import weighted_coreness

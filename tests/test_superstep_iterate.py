@@ -9,12 +9,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dachshund_spark.operators.builders import edges_df
+from dachshund_spark.operators.centrality import betweenness
 from dachshund_spark.operators.components import (
+    connected_components,
     is_acyclic,
     strongly_connected_components,
 )
+from dachshund_spark.operators.coreness import coreness, k_core_vertices
 from dachshund_spark.operators.dag import topological_levels
+from dachshund_spark.operators.pagerank import pagerank
 from dachshund_spark.operators.paths import double_sweep_diameter
+from dachshund_spark.operators.triangles import global_stats
 from dachshund_spark.plans.superstep import (
     CheckpointManager,
     SuperstepMetrics,
@@ -130,6 +135,11 @@ def test_torn_commit_is_not_resumed(spark, tmp_path):
 _SCC_EDGES = [(0, 1), (1, 2), (2, 1), (2, 3), (3, 4), (4, 5), (5, 3), (5, 6)]
 
 
+def _cc_not_converged(e):
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(e, max_iter=1)
+
+
 @pytest.mark.parametrize(
     "op, edges",
     [
@@ -137,18 +147,33 @@ _SCC_EDGES = [(0, 1), (1, 2), (2, 1), (2, 3), (3, 4), (4, 5), (5, 3), (5, 6)]
         (is_acyclic, KARATE_CLUB_EDGES),
         (strongly_connected_components, _SCC_EDGES),
         (double_sweep_diameter, KARATE_CLUB_EDGES),
+        (betweenness, KARATE_CLUB_EDGES),
+        (global_stats, KARATE_CLUB_EDGES),
+        (coreness, KARATE_CLUB_EDGES),
+        (lambda e: k_core_vertices(e, 3), KARATE_CLUB_EDGES),
+        (connected_components, KARATE_CLUB_EDGES),
+        (_cc_not_converged, KARATE_CLUB_EDGES),
+        (lambda e: pagerank(e, max_iter=5), KARATE_CLUB_EDGES),
     ],
     ids=[
         "topological_levels",
         "is_acyclic",
         "strongly_connected_components",
         "double_sweep_diameter",
+        "betweenness",
+        "global_stats",
+        "coreness",
+        "k_core_vertices",
+        "connected_components",
+        "connected_components_not_converged",
+        "pagerank",
     ],
 )
 def test_operators_leave_only_their_output_cut(spark, op, edges):
     """An operator built on cut/persist states leaves nothing persisted
     behind but the cut its returned frame reads, and ``release`` of that
-    frame frees it."""
+    frame frees it.  An operator that returns no frame (a dict, a bool,
+    or a raise) leaves nothing at all."""
     sc = spark.sparkContext
     before = set(sc._jsc.getPersistentRDDs().keySet())
     out = op(edges_df(spark, edges))
