@@ -8,17 +8,17 @@ reference's own `_get_k_cores` carries an acknowledged bug
 ``operators.pergraph``; these operators are the single-giant-graph scale
 path.
 
-Loops: ``coreness`` and the k-core / k-truss / trussness peels run on
-``plans.superstep.iterate``.  A peel's state is its surviving rows with
-the aggregate it tests (degree, triangle support); a round subtracts what
-the dropped rows took away instead of re-aggregating the graph, and the
-round's aggregate counts the rows the NEXT round drops, so convergence
-needs no separate count.  ``weighted_coreness`` keeps its own sweep: it
-re-sums float weights per round, so its exact shell comparisons hold.
+Loops: ``coreness``, the weighted core sweep and the k-core / k-truss /
+trussness peels run on ``plans.superstep.iterate``.  A peel's state is
+its surviving rows with the aggregate it tests (degree, triangle
+support); a round subtracts what the dropped rows took away instead of
+re-aggregating the graph, and the round's aggregate counts the rows the
+NEXT round drops, so convergence needs no separate count.
 """
 
 from __future__ import annotations
 
+import math
 from functools import reduce
 
 from pyspark.sql import DataFrame, Window
@@ -35,60 +35,13 @@ from .builders import (
     canonical_undirected,
     min_degree_prune,
     symmetrized,
-    vertices,
 )
 from .components import connected_components
+from .triangles import _degrees, _triples
 
 
 def _sym_degrees(sym: DataFrame) -> DataFrame:
     return sym.groupBy(F.col("src").alias("v")).agg(F.count("*").alias("degree"))
-
-
-class _PeelAccumulator:
-    """Folds per-round peel outputs into a running lineage-cut table so a
-    long peel sweep never builds an O(#rounds)-leg union plan (a
-    thousand-round continuous-weight sweep would otherwise hand Catalyst a
-    thousand-leg union — minutes of analysis time — and pin every round's
-    checkpoint blocks until the end).
-
-    Rounds are buffered and folded every ``fold_every`` rounds: the plan
-    any round sees is bounded at fold_every+1 legs, the accumulator is
-    rewritten only rounds/fold_every times (amortized O(|total|/fold_every)
-    checkpoint I/O per round — the same fold-don't-rewrite discipline as
-    betweenness_superstep's dependency accumulator), and each fold releases
-    the buffered peel cuts instead of holding all of them to the end."""
-
-    def __init__(self, fold_every: int = 32):
-        self.fold_every = fold_every
-        self.acc: DataFrame | None = None
-        self.parts: list[tuple[DataFrame, object]] = []  # (peel_cut, shell)
-
-    def add(self, peel: DataFrame, shell) -> None:
-        self.parts.append((peel, shell))
-        if len(self.parts) >= self.fold_every:
-            self._fold()
-
-    def _fold(self) -> None:
-        if not self.parts:
-            return
-        legs = [
-            p.select("v", F.lit(s).alias("coreness")) for p, s in self.parts
-        ]
-        u = legs[0]
-        for leg in legs[1:]:
-            u = u.union(leg)
-        if self.acc is not None:
-            u = self.acc.union(u)
-        new_acc = cut_lineage(u)
-        release(self.acc)
-        for p, _ in self.parts:
-            release(p)
-        self.acc = new_acc
-        self.parts = []
-
-    def result(self) -> DataFrame | None:
-        self._fold()
-        return self.acc
 
 
 def k_core_vertices(edges: DataFrame, k: int, max_rounds: int = 1000) -> DataFrame:
@@ -328,9 +281,8 @@ def coreness_peel(edges: DataFrame, max_rounds: int = 10000) -> DataFrame:
     at scale — this variant's round count grows with the number of shell
     levels."""
     unit = canonical_undirected(edges).withColumn("weight", F.lit(1.0))
-    return weighted_coreness(unit, max_rounds).select(
-        "v", F.col("coreness").cast("int").alias("coreness")
-    )
+    out = weighted_coreness(unit, max_rounds)
+    return project(out, "v", F.col("coreness").cast("int").alias("coreness"))
 
 
 def weighted_coreness(
@@ -354,71 +306,82 @@ def weighted_coreness(
     values.  Integer/decimal weight domains (the gated fixtures) converge
     in a few rounds; CONTINUOUS real-valued weights can make every shell
     distinct — rounds can approach V, which at web scale is a driver-bound
-    sweep no accumulator can save.  For such inputs pass ``quantize``: the
-    peel threshold each round is the min remaining weight rounded UP to
-    the quantize grid (shell = ceil(min_w / quantize) * quantize), so one
-    round retires an entire grid bucket and rounds <= weight-range /
+    sweep.  For such inputs pass ``quantize``: the peel threshold each
+    round is the min remaining weight rounded UP to the quantize grid
+    (shell = ceil(min_w / quantize) * quantize), so one round retires an
+    entire grid bucket and rounds <= weight-range /
     quantize.  This CHANGES SEMANTICS — reported coreness values are the
     grid shells, an upper rounding of the exact s-core values — which is
     why it is opt-in and off for the exact gate path.
 
-    Plan/memory shape: per-round peels fold into a running lineage-cut
-    accumulator (``_PeelAccumulator``) — bounded plan width and amortized
-    checkpoint I/O regardless of round count (a thousand-round sweep
-    previously assembled a thousand-leg union plan).
+    Plan/memory shape: one ``iterate`` loop at cadence 1 over a single
+    (v, w, coreness) frame; ``coreness`` is null while a vertex is open
+    and ``w`` is an open vertex's remaining weight.  A round labels every
+    open vertex with ``w <= shell`` and RE-SUMS ``w`` for the rest from
+    the edges whose two endpoints are both still open — the same terms a
+    shrinking edge table would sum, so the exact ``w <= shell`` tests
+    never see a decremented float.  The trade: the state holds all V
+    vertex rows every round, and each round scans the full cached
+    symmetrized edge table through two semi-joins instead of a per-round
+    shrunken copy of it.  Raises ``RuntimeError`` if ``max_rounds`` runs
+    out before every vertex is labeled.
     """
-    spark = wedges.sparkSession
-    sym = wedges.select("src", "dst", "weight").union(
-        wedges.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst"), "weight"
-        )
+    sym = wedges.selectExpr("src", "dst", "weight").union(
+        wedges.selectExpr("dst as src", "src as dst", "weight")
     ).persist()
-    sym.count()
-    # the remaining-vertex set is tracked explicitly: a vertex whose
-    # neighbors are all peeled in one round becomes isolated (weight 0)
-    # and must still be assigned the current shell value
-    remaining = cut_lineage(vertices(sym.select("src", "dst")))
-    results = _PeelAccumulator()
+    is_open = F.col("coreness").isNull()
+    state = (
+        sym.groupBy(F.col("src").alias("v"))
+        .agg(F.sum("weight").alias("w"))
+        .withColumn("coreness", F.lit(None).cast("double"))
+        .persist()
+    )
     shell = float("-inf")
-    for _ in range(max_rounds):
-        sums = sym.groupBy(F.col("src").alias("v")).agg(
-            F.sum("weight").alias("w")
-        )
-        w = remaining.join(sums, "v", "left").select(
-            "v", F.coalesce("w", F.lit(0.0)).alias("w")
-        ).persist()
-        # one driver action per round: remaining-count + min folded
-        agg = w.agg(F.count("*").alias("n"), F.min("w").alias("min_w")).collect()[0]
-        if agg["n"] == 0:
-            w.unpersist()
-            break
-        min_w = float(agg["min_w"])
-        if quantize is not None:
-            import math
 
-            min_w = math.ceil(min_w / quantize) * quantize
-        shell = max(shell, min_w)
-        # the argmin vertex has w == min_w <= shell, so the peel set is
-        # never empty — no separate count action needed
-        peel = cut_lineage(w.filter(F.col("w") <= shell).select("v"))
-        w.unpersist()
-        prev_remaining = remaining
-        remaining = cut_lineage(remaining.join(peel, "v", "left_anti"))
-        release(prev_remaining)
-        nxt = cut_lineage(
-            sym.join(peel.withColumnRenamed("v", "src"), "src", "left_anti")
-            .join(peel.withColumnRenamed("v", "dst"), "dst", "left_anti")
-            .select("src", "dst", "weight")
+    def step(state: DataFrame, i: int):
+        peel = is_open & (F.col("w") <= shell)
+        stays = is_open & (F.col("w") > shell)
+        still_open = state.filter(stays).select("v")
+        # an open vertex that no open edge reaches keeps w = 0 (the star
+        # centre), so it is labeled with the next shell
+        sums = (
+            sym.join(still_open.withColumnRenamed("v", "src"), "src", "left_semi")
+            .join(still_open.withColumnRenamed("v", "dst"), "dst", "left_semi")
+            .groupBy(F.col("src").alias("v"))
+            .agg(F.sum("weight").alias("sum_w"))
         )
-        release(sym)
-        sym = nxt
-        # accumulate AFTER the anti-joins: a fold releases buffered peels
-        results.add(peel, shell)
-    release(sym)
-    out = results.result()
-    if out is None:
-        return spark.createDataFrame([], "v long, coreness double")
-    return out
+        new_state = state.join(sums, "v", "left").select(
+            "v",
+            F.when(stays, F.coalesce("sum_w", F.lit(0.0)))
+            .otherwise(F.col("w"))
+            .alias("w"),
+            F.when(peel, F.lit(shell)).otherwise(F.col("coreness")).alias("coreness"),
+        )
+        return new_state, aggs, measure
+
+    aggs = [
+        F.sum(is_open.cast("long")).alias("open"),
+        F.min(F.when(is_open, F.col("w"))).alias("min_w"),
+    ]
+
+    def measure(row):
+        nonlocal shell
+        n_open = int(row["open"] or 0)
+        if n_open:
+            min_w = float(row["min_w"])
+            if quantize is not None:
+                min_w = math.ceil(min_w / quantize) * quantize
+            shell = max(shell, min_w)
+        return n_open, n_open
+
+    # seeds the first shell; with no vertex at all, round 1 converges
+    measure(state.agg(*aggs).collect()[0])
+    result = iterate(state, step, max_iter=max_rounds, checkpoint_every=1)
+    sym.unpersist()
+    if not result.converged:
+        release(result.state)
+        raise RuntimeError(f"weighted_coreness: not converged in {max_rounds} rounds")
+    return project(result.state, "v", "coreness")
 
 
 def averaged_ties_rank(
@@ -465,68 +428,25 @@ def coreness_anomaly(edges: DataFrame) -> DataFrame:
     )
 
 
-def _edge_support_full(canon: DataFrame) -> DataFrame:
-    """Triangle support per canonical edge, computed ONCE via
-    degree-oriented wedge enumeration (each triangle generated exactly
-    once; O(m^1.5) fan-out — see operators.triangles).  ``canon`` MUST
-    already be canonical (src < dst, deduped, loop-free).
+def _edge_support(canon: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Triangle support per canonical edge from the one degree-oriented
+    triangle enumeration (``triangles._triples``: each triangle once,
+    O(m^1.5) fan-out).  ``canon`` MUST already be canonical (src < dst,
+    deduped, loop-free).
 
-    Returns a lineage-cut DataFrame[src, dst, support] containing only
-    edges with support >= 1: an edge in no triangle can never reach any
+    Returns the lazy DataFrame[src, dst, support] over only the edges
+    with support >= 1 — an edge in no triangle can never reach any
     k-truss (k >= 3) and its removal decrements nothing, so omitting it
-    is exactly equivalent to dropping it in round 0 — and saves the
-    full-width join back onto the edge table."""
-    deg = (
-        canon.select(F.col("src").alias("v"))
-        .union(canon.select(F.col("dst").alias("v")))
-        .groupBy("v")
-        .agg(F.count("*").alias("degree"))
-    )
-    e = (
-        canon.join(deg.withColumnRenamed("v", "src"), "src")
-        .withColumnRenamed("degree", "deg_src")
-        .join(
-            deg.withColumnRenamed("v", "dst").withColumnRenamed(
-                "degree", "deg_dst"
-            ),
-            "dst",
-        )
-    )
-    lower_first = (F.col("deg_src") < F.col("deg_dst")) | (
-        (F.col("deg_src") == F.col("deg_dst")) & (F.col("src") < F.col("dst"))
-    )
-    o = e.select(
-        F.when(lower_first, F.col("src")).otherwise(F.col("dst")).alias("a"),
-        F.when(lower_first, F.col("dst")).otherwise(F.col("src")).alias("b"),
-    ).persist()
-    e1 = o.select("a", F.col("b").alias("u"))
-    e2 = o.select("a", F.col("b").alias("w"))
-    wedges = e1.join(e2, "a").filter(F.col("u") < F.col("w"))
-    closing = canon.select(F.col("src").alias("u"), F.col("dst").alias("w"))
-    # materialize the triangle set ONCE: the three union branches below
-    # would otherwise each re-run the wedge join (and re-build its
-    # broadcast hash maps — measured as GC-thrash-grade overhead at 1M+
-    # edges)
-    tri = wedges.join(closing, ["u", "w"]).persist()
-    tri.count()
+    is exactly equivalent to dropping it in round 0 — and the triangle
+    cut it reads, which the caller releases once the support frame is
+    sealed."""
+    tri = _triples(canon, _degrees(canon))
     edges3 = (
-        tri.select(
-            F.least("a", "u").alias("src"), F.greatest("a", "u").alias("dst")
-        )
-        .union(
-            tri.select(
-                F.least("a", "w").alias("src"),
-                F.greatest("a", "w").alias("dst"),
-            )
-        )
-        .union(tri.select(F.col("u").alias("src"), F.col("w").alias("dst")))
+        tri.select(F.least("x", "y").alias("src"), F.greatest("x", "y").alias("dst"))
+        .union(tri.select(F.least("x", "z").alias("src"), F.greatest("x", "z").alias("dst")))
+        .union(tri.select(F.col("y").alias("src"), F.col("z").alias("dst")))
     )
-    out = cut_lineage(
-        edges3.groupBy("src", "dst").agg(F.count("*").alias("support"))
-    )
-    tri.unpersist()
-    o.unpersist()
-    return out
+    return edges3.groupBy("src", "dst").agg(F.count("*").alias("support")), tri
 
 
 def _decrement_support(
@@ -567,22 +487,31 @@ def _decrement_support(
 
 
 def _support_round(
-    state: DataFrame, k: int, n_drop: int, n_edges: int
+    state: DataFrame, k: int, n_drop: int, n_edges: int, retire: list
 ) -> tuple[DataFrame, DataFrame]:
     """One truss peel round over the (src, dst, support) state at stage
     k: returns the lazy successor and the (src, dst) edges that leave the
     state, which on a dense round (dropped > survivors / 4) include the
     survivors the recount leaves in no triangle.  The state is unique on
-    (src, dst), so the survivors are the complementary filter."""
+    (src, dst), so the survivors are the complementary filter.  A dense
+    round appends the triangle cut its recount reads to ``retire``; the
+    caller releases it once ``iterate`` has sealed the successor."""
     keep = F.col("support") >= k - 2
     drop = state.filter(~keep).select("src", "dst")
     surviving = state.filter(keep)
     if n_drop * 4 <= n_edges - n_drop:
         return _decrement_support(state, drop, surviving), drop
     surv_edges = surviving.select("src", "dst")
-    new_state = _edge_support_full(surv_edges)
+    new_state, tri = _edge_support(surv_edges)
+    retire.append(tri)
     shed = surv_edges.join(new_state.select("src", "dst"), ["src", "dst"], "left_anti")
     return new_state, drop.union(shed)
+
+
+def _release_all(leaves: list) -> None:
+    for leaf in leaves:
+        release(leaf)
+    leaves.clear()
 
 
 def _support_aggs(k: int) -> list:
@@ -633,25 +562,21 @@ def k_truss_edges(edges: DataFrame, k: int, max_rounds: int = 1000) -> DataFrame
     if k <= 2:
         # every edge trivially has support >= 0: the 2-truss is the graph
         return base
-    deg_ok = (
-        base.select(F.col("src").alias("v"))
-        .union(base.select(F.col("dst").alias("v")))
-        .groupBy("v")
-        .agg(F.count("*").alias("degree"))
-        .filter(F.col("degree") >= k - 1)
-        .select("v")
-    )
+    deg_ok = _degrees(base).filter(F.col("degree") >= k - 1).select("v")
     canon = cut_lineage(
         base.join(deg_ok.withColumnRenamed("v", "src"), "src", "left_semi")
         .join(deg_ok.withColumnRenamed("v", "dst"), "dst", "left_semi")
         .select("src", "dst")
     )
-    state = _edge_support_full(canon)
+    support, tri = _edge_support(canon)
+    state = cut_lineage(support)
+    release(tri)
     release(canon)
     n_edges = n_drop = 0
+    retire: list[DataFrame] = []
 
     def step(state: DataFrame, i: int):
-        new_state, _ = _support_round(state, k, n_drop, n_edges)
+        new_state, _ = _support_round(state, k, n_drop, n_edges, retire)
         return new_state, aggs, measure
 
     aggs = _support_aggs(k)
@@ -659,6 +584,7 @@ def k_truss_edges(edges: DataFrame, k: int, max_rounds: int = 1000) -> DataFrame
     def measure(row):
         nonlocal n_edges, n_drop
         n_edges, n_drop = int(row["n"]), int(row["drop"] or 0)
+        _release_all(retire)  # the sealed successor no longer reads them
         return n_drop, n_edges
 
     if measure(state.agg(*aggs).collect()[0])[0] == 0:
@@ -694,9 +620,10 @@ def trussness(edges: DataFrame, max_rounds: int = 10000) -> DataFrame:
     Returns DataFrame[src, dst, trussness] over every canonical edge
     (triangle-free edges have trussness 2).
     """
-    canon = canonical_undirected(edges)
-    canon = cut_lineage(canon)
-    state = _edge_support_full(canon)  # only support >= 1 rows
+    canon = cut_lineage(canonical_undirected(edges))
+    support, tri = _edge_support(canon)  # only support >= 1 rows
+    state = cut_lineage(support)
+    release(tri)
     # edges in no triangle at all: trussness 2, settled without peeling
     base2 = cut_lineage(
         canon.join(state.select("src", "dst"), ["src", "dst"], "left_anti")
@@ -706,13 +633,14 @@ def trussness(edges: DataFrame, max_rounds: int = 10000) -> DataFrame:
     labeled: list[DataFrame] = [base2]
     k = 3
     n_edges, n_drop = 0, None
+    retire: list[DataFrame] = []
 
     def step(state: DataFrame, i: int):
         nonlocal n_drop
         if n_drop is None:
             # first round of a stage: its drop count is not known yet
             n_drop = state.filter(F.col("support") < k - 2).count()
-        new_state, gone = _support_round(state, k, n_drop, n_edges)
+        new_state, gone = _support_round(state, k, n_drop, n_edges, retire)
         labeled.append(
             cut_lineage(gone.select("src", "dst", F.lit(k - 1).alias("trussness")))
         )
@@ -721,6 +649,7 @@ def trussness(edges: DataFrame, max_rounds: int = 10000) -> DataFrame:
     def measure(row):
         nonlocal k, n_edges, n_drop
         n_edges, n_drop = int(row["n"]), int(row["drop"] or 0)
+        _release_all(retire)
         if n_edges and not n_drop:
             # stage dry: jump to the first stage with any drop
             k, n_drop = int(row["min_support"]) + 3, None
@@ -732,8 +661,7 @@ def trussness(edges: DataFrame, max_rounds: int = 10000) -> DataFrame:
         result = iterate(state, step, max_iter=max_rounds, checkpoint_every=1)
         state, converged = result.state, result.converged
     out = cut_lineage(reduce(DataFrame.union, labeled)) if converged else None
-    for leaf in [state, *labeled]:
-        release(leaf)
+    _release_all([state, *labeled])
     if not converged:
         raise RuntimeError(f"trussness: not converged in {max_rounds} rounds")
     return out

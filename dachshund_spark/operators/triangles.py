@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.superstep import cut_lineage, release
+from ..plans.superstep import cut_lineage, project, release
 from .builders import canonical_undirected
 
 
@@ -104,20 +104,29 @@ def triangle_triples(edges: DataFrame) -> DataFrame:
     return _triples(canon, _degrees(canon))
 
 
-def triangle_counts(edges: DataFrame) -> DataFrame:
-    """DataFrame[v, triangles] — triangles touching each vertex; vertices in
-    no triangle appear with 0 (cf. transitivity.rs:20-34)."""
+def _per_vertex(edges: DataFrame, *cols) -> DataFrame:
+    """``cols`` of ``_with_triangles`` over ``edges``, carrying the
+    triangle cut's release handle: ``release(out)`` frees the cut the
+    lazy frame reads."""
     canon = canonical_undirected(edges)
     deg = _degrees(canon)
-    return _with_triangles(deg, _triples(canon, deg)).select("v", "triangles")
+    tri = _triples(canon, deg)
+    return project(_with_triangles(deg, tri), *cols, cut=tri)
+
+
+def triangle_counts(edges: DataFrame) -> DataFrame:
+    """DataFrame[v, triangles] — triangles touching each vertex; vertices in
+    no triangle appear with 0 (cf. transitivity.rs:20-34).  ``release``
+    the result once nothing reads it."""
+    return _per_vertex(edges, "v", "triangles")
 
 
 def clustering_coefficients(edges: DataFrame) -> DataFrame:
     """DataFrame[v, degree, coefficient] with coefficient = 2*tri/(d*(d-1));
-    null when degree <= 1 (cf. clustering.rs:20-39)."""
-    canon = canonical_undirected(edges)
-    deg = _degrees(canon)
-    return _with_triangles(deg, _triples(canon, deg)).select(
+    null when degree <= 1 (cf. clustering.rs:20-39).  ``release`` the
+    result once nothing reads it."""
+    return _per_vertex(
+        edges,
         "v",
         "degree",
         F.when(
@@ -128,11 +137,9 @@ def clustering_coefficients(edges: DataFrame) -> DataFrame:
 
 
 def avg_clustering(edges: DataFrame) -> float:
-    row = (
-        clustering_coefficients(edges)
-        .agg(F.avg("coefficient").alias("c"))
-        .collect()[0]
-    )
+    cc = clustering_coefficients(edges)
+    row = cc.agg(F.avg("coefficient").alias("c")).collect()[0]
+    release(cc)
     return row["c"]
 
 

@@ -1,8 +1,9 @@
 """Superstep driver loop with lineage control, per-superstep checkpoints,
 and metrics — the iterative backbone under PageRank / connected components /
 label propagation / eigenvector centrality / coreness / SCC labels / the
-k-core, k-truss and trussness peels / the Kahn peel (topological levels and
-the SCC trim) / the acyclicity sink strip / weighted SSSP.
+k-core, k-truss and trussness peels / the weighted core sweep (and its
+unit-weight ``coreness_peel``) / the Kahn peel (topological levels and the
+SCC trim) / the acyclicity sink strip / weighted SSSP.
 
 Spark has no native iterate-to-fixpoint, so iterative algorithms are driver
 loops where every iteration appends to the logical plan.  Unchecked, plan
@@ -159,13 +160,14 @@ def release(df: DataFrame | None) -> None:
         pass
 
 
-def project(state: DataFrame, *cols) -> DataFrame:
-    """``state.select(*cols)`` that keeps ``state``'s release handle, so
-    the caller's ``release(out)`` frees the sealed state the projection
-    reads.  The way an operator returns columns of ``iterate``'s
-    ``result.state`` (or any ``cut_lineage`` product)."""
+def project(state: DataFrame, *cols, cut: DataFrame | None = None) -> DataFrame:
+    """``state.select(*cols)`` that keeps the release handle of ``cut``
+    (default ``state``), so the caller's ``release(out)`` frees the sealed
+    state the projection reads.  The way an operator returns columns of
+    ``iterate``'s ``result.state`` (or any ``cut_lineage`` product), or of
+    a lazy frame over one ``cut``."""
     out = state.select(*cols)
-    out._cut_rdd = getattr(state, "_cut_rdd", None)
+    out._cut_rdd = getattr(state if cut is None else cut, "_cut_rdd", None)
     return out
 
 

@@ -14,6 +14,7 @@ from dachshund_spark.operators.components import (
 )
 from dachshund_spark.operators.coreness import (
     coreness,
+    coreness_peel,
     k_core_components,
     k_core_vertices,
     k_truss_edges,
@@ -154,6 +155,10 @@ def test_peels_raise_when_max_rounds_runs_out(spark):
     path = B.edges_df(spark, [(1, 2), (2, 3)])
     with pytest.raises(RuntimeError, match="not converged"):
         k_core_vertices(path, 2, max_rounds=1)
+    # the unit-weight shell sweep labels the ends in round 1 and the
+    # middle in round 2
+    with pytest.raises(RuntimeError, match="not converged"):
+        coreness_peel(path, max_rounds=1)
     # K6 plus a tail of three triangles hanging off it: the 4-truss peel
     # drops the tail's support-1 edges in round 1, which leaves (1, 7)
     # and (1, 8) in no triangle for round 2

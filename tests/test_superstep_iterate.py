@@ -8,25 +8,35 @@ import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dachshund_spark.operators.builders import edges_df
+from dachshund_spark.operators.builders import edges_df, weighted_canonical
 from dachshund_spark.operators.centrality import betweenness
 from dachshund_spark.operators.components import (
     connected_components,
     is_acyclic,
     strongly_connected_components,
 )
-from dachshund_spark.operators.coreness import coreness, k_core_vertices
+from dachshund_spark.operators.coreness import (
+    coreness,
+    coreness_peel,
+    k_core_vertices,
+    k_truss_edges,
+    weighted_coreness,
+)
 from dachshund_spark.operators.dag import topological_levels
 from dachshund_spark.operators.pagerank import pagerank
 from dachshund_spark.operators.paths import double_sweep_diameter
-from dachshund_spark.operators.triangles import global_stats
+from dachshund_spark.operators.triangles import (
+    clustering_coefficients,
+    global_stats,
+    triangle_counts,
+)
 from dachshund_spark.plans.superstep import (
     CheckpointManager,
     SuperstepMetrics,
     iterate,
     release,
 )
-from tests.fixtures import KARATE_CLUB_EDGES
+from tests.fixtures import KARATE_CLUB_EDGES, weighted_graph_edges
 
 
 def _python_countdown(n, max_iter):
@@ -140,6 +150,12 @@ def _cc_not_converged(e):
         connected_components(e, max_iter=1)
 
 
+def _weighted_coreness_fixture5(e):
+    # the harness hands over an unweighted frame; this case needs weights
+    fixture = edges_df(e.sparkSession, weighted_graph_edges(5), weighted=True)
+    return weighted_coreness(weighted_canonical(fixture))
+
+
 @pytest.mark.parametrize(
     "op, edges",
     [
@@ -154,6 +170,11 @@ def _cc_not_converged(e):
         (connected_components, KARATE_CLUB_EDGES),
         (_cc_not_converged, KARATE_CLUB_EDGES),
         (lambda e: pagerank(e, max_iter=5), KARATE_CLUB_EDGES),
+        (_weighted_coreness_fixture5, []),
+        (coreness_peel, KARATE_CLUB_EDGES),
+        (lambda e: k_truss_edges(e, 4), KARATE_CLUB_EDGES),
+        (triangle_counts, KARATE_CLUB_EDGES),
+        (clustering_coefficients, KARATE_CLUB_EDGES),
     ],
     ids=[
         "topological_levels",
@@ -167,6 +188,11 @@ def _cc_not_converged(e):
         "connected_components",
         "connected_components_not_converged",
         "pagerank",
+        "weighted_coreness",
+        "coreness_peel",
+        "k_truss_edges",
+        "triangle_counts",
+        "clustering_coefficients",
     ],
 )
 def test_operators_leave_only_their_output_cut(spark, op, edges):
