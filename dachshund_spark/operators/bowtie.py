@@ -15,9 +15,10 @@ connected_components.rs:26-155, stops at component membership); this is a
 web-native composite built entirely from the engine's own gated
 primitives: ``strongly_connected_components`` (true-SCC fwd/bwd min-label
 peeling), ``weakly_connected_components`` (hash-min label propagation),
-and two frontier BFS reachability sweeps from the core — each a
-per-depth cut-leaf loop with one edge join + one anti-join per depth,
-the same O(|E|)-per-superstep shape PageRank runs at 100 TB.
+and two directed BFS reachability sweeps from the core on
+``paths.frontier_levels`` — one edge join + one anti-join per depth,
+each level a lazy cut materialized by that depth's count, the same
+O(|E|)-per-superstep shape PageRank runs at 100 TB.
 
 IN and OUT cannot overlap outside the core (a vertex both reaching and
 reached by the core would be strongly connected to it, contradicting SCC
@@ -30,6 +31,8 @@ functions.kernels.bowtie).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -39,48 +42,28 @@ from .components import (
     strongly_connected_components,
     weakly_connected_components,
 )
+from .paths import frontier_levels
 
 
 def _reach_from(edges: DataFrame, seeds: DataFrame, max_depth: int) -> DataFrame:
     """Vertices reachable from ``seeds`` along ``edges`` in 1..max_depth
-    hops, EXCLUDING the seeds themselves: per-depth frontier expansion,
-    each level an eager cut leaf, dedup via anti-join against the lazy
-    union of prior levels (the harmonic/betweenness forward discipline).
-    Returns an eager cut DataFrame[v]; all intermediate levels freed."""
-    levels = [cut_lineage(seeds.select("v"))]
-    depth = 0
-    while depth < max_depth:
-        frontier = levels[depth]
-        msgs = (
-            frontier.join(edges, frontier.v == edges.src)
-            .select(F.col("dst").alias("v"))
-            .distinct()
-        )
-        visited = levels[0]
-        for lv in levels[1:]:
-            visited = visited.union(lv)
-        new = cut_lineage(msgs.join(visited, ["v"], "left_anti"))
-        if new.count() == 0:
-            release(new)
-            break
-        levels.append(new)
-        depth += 1
-    else:
+    hops, EXCLUDING the seeds themselves: the directed ``frontier_levels``
+    past level 0, unioned into one eager cut DataFrame[v]; every level is
+    freed."""
+    levels, exhausted = frontier_levels(edges, seeds, max_depth=max_depth)
+    # level 0's empty slice types the union when nothing is reached
+    out = (
+        cut_lineage(reduce(DataFrame.union, levels[1:], levels[0].limit(0)))
+        if exhausted
+        else None
+    )
+    for lv in levels:
+        release(lv)
+    if out is None:
         raise RuntimeError(
             f"bowtie reachability: BFS did not exhaust in {max_depth} "
             "levels; raise max_depth"
         )
-    if depth == 0:
-        for lv in levels:
-            release(lv)
-        spark = edges.sparkSession
-        return cut_lineage(spark.createDataFrame([], "v long"))
-    reached = levels[1]
-    for lv in levels[2:]:
-        reached = reached.union(lv)
-    out = cut_lineage(reached)
-    for lv in levels:
-        release(lv)
     return out
 
 

@@ -30,8 +30,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.superstep import cut_lineage, iterate, project
+from ..plans.superstep import cut_lineage, iterate, project, release
 from .builders import canonical_undirected, symmetrized, vertices
+from .paths import frontier_levels
 
 
 def eigenvector_centrality(
@@ -349,6 +350,41 @@ def betweenness(
         csr.destroy()
 
 
+def _release_levels(levels: list, sym: DataFrame) -> None:
+    for lv in levels:
+        release(lv)
+    sym.unpersist()
+
+
+def _source_levels(edges, sources, max_sources, seed, max_depth, sigma, name):
+    """The persisted symmetrized edges, their vertices, and the symmetric
+    ``frontier_levels`` of the selected sources: (source, v) rows, plus
+    the shortest-path count ``sigma`` when asked.  Raises, with all of it
+    released, when ``max_depth`` runs out first."""
+    sym = symmetrized(edges).repartition("src").persist()
+    sym.count()
+    verts = vertices(sym)
+    seeds = _select_sources(
+        edges.sparkSession, verts, sources, max_sources, seed
+    ).select("source", F.col("source").alias("v"))
+    if sigma:
+        seeds = seeds.withColumn("sigma", F.lit(1.0))
+    levels, exhausted = frontier_levels(
+        sym,
+        seeds,
+        keys=("source",),
+        carry="sigma" if sigma else None,
+        symmetric=True,
+        max_depth=max_depth,
+    )
+    if not exhausted:
+        _release_levels(levels, sym)
+        raise RuntimeError(
+            f"{name}: BFS did not exhaust in {max_depth} levels; raise max_depth"
+        )
+    return sym, verts, levels
+
+
 def betweenness_superstep(
     edges: DataFrame,
     sources: list[int] | None = None,
@@ -373,13 +409,6 @@ def betweenness_superstep(
     counts are exact up to 2^53 — beyond that the per-task kernel's Python
     bigints differ, which no sampled web-graph workload reaches.
     """
-    spark = edges.sparkSession
-    from ..plans.superstep import release
-
-    sym = symmetrized(edges).repartition("src").persist()
-    sym.count()
-    verts = vertices(sym)
-    src_df = _select_sources(spark, verts, sources, max_sources, seed)
     # Key narrowing long -> int32 (guide "narrower types") was
     # implemented with a runtime id-bounds guard and REJECTED by
     # interleaved A/B (1/3 pairs, median 45.9s vs 43.4s at sf0.1,
@@ -397,78 +426,13 @@ def betweenness_superstep(
     # measured win, so it was removed; the observation is recorded here
     # for the next time this operator is profiled on a real cluster.
 
-    # forward: levels[d] = the depth-d frontier (source, v, sigma), each a
-    # separate cut_lineage product.  Per-depth checkpoint I/O is the NEW
-    # frontier only — the old design rewrote the full accumulated visited
-    # state every level (union + cut), i.e. O(depth × |state|) checkpoint
-    # I/O, quadratic-ish in depth for deep graphs.  Dedup anti-joins
-    # against the lazy union of the frontier leaves: same scan volume as
-    # one consolidated state table, no rewrite; the union legs are
-    # stat-free LogicalRDD leaves, so Catalyst's size estimator stays
-    # bounded (cut_lineage doc).  The backward pass reads exactly two
-    # frontier leaves per depth instead of filtering the full state twice.
-    levels = [
-        cut_lineage(
-            src_df.select(
-                "source",
-                F.col("source").alias("v"),
-                F.lit(1.0).alias("sigma"),
-            )
-        )
-    ]
-    # (An anti-join-BEFORE-aggregate variant — broadcast the visited set
-    # and drop already-visited targets before the sigma aggregate — was
-    # measured and REJECTED: rebuilding the O(|S| x |V|)-row visited
-    # broadcast every depth cost more than the aggregate it saved, 54s ->
-    # 104s at sf0.1.  Aggregate-first is also the only order that scales
-    # past a broadcastable visited set.)
-    depth = 0
-    while depth < max_depth:
-        frontier = levels[depth]
-        # NOTE: deliberately NOT shuffle_hash-hinted (unlike the single-
-        # vector supersteps): the frontier here is (source, v) pairs — up
-        # to |S|x|V| rows, routinely BIGGER than the edge table — so
-        # letting the planner broadcast the (known-size) edge side when it
-        # fits beats shuffling the fat frontier (measured: hinting this
-        # join 54s -> 84s at sf0.1); past the broadcast threshold the
-        # planner degrades to SMJ on its own.
-        msgs = frontier.join(sym, frontier.v == sym.src).select(
-            "source", F.col("dst").alias("v"), "sigma"
-        )
-        # BFS dedup window: a candidate produced by expanding depth d is
-        # adjacent to a distance-d vertex, so its true distance is d-1, d
-        # or d+1 — an already-visited candidate can only live in levels d
-        # or d-1.  Anti-joining against those two leaves is therefore
-        # result-identical to anti-joining against every level (identical
-        # on every pair in BENCH/AB_VISITED_WINDOW_r07.txt) while scanning
-        # and shuffling O(2 levels) instead of O(total visited) per depth —
-        # the old full union re-shuffled the entire accumulated state
-        # (up to |S|x|V| rows) every round.
-        visited = levels[depth].select("source", "v")
-        if depth > 0:
-            visited = visited.union(levels[depth - 1].select("source", "v"))
-        cand = msgs.groupBy("source", "v").agg(F.sum("sigma").alias("sigma"))
-        # lazy cut: the count() below materializes the checkpoint in the
-        # same job — one driver job per depth instead of two
-        # (BENCH/AB_LAZY_CUTS_r07.txt).  The leaves this cut reads stay
-        # live until the backward pass, so no release ordering depends on
-        # eagerness here.
-        new = cut_lineage(
-            cand.join(visited, ["source", "v"], "left_anti").select(
-                "source", "v", "sigma"
-            ),
-            eager=False,
-        )
-        if new.count() == 0:
-            release(new)
-            break
-        levels.append(new)
-        depth += 1
-    else:
-        raise RuntimeError(
-            f"betweenness_superstep: BFS did not exhaust in {max_depth} "
-            "levels; raise max_depth"
-        )
+    # forward: levels[d] = the depth-d frontier (source, v, sigma); the
+    # backward pass reads exactly two frontier leaves per depth instead of
+    # filtering one accumulated state twice
+    sym, verts, levels = _source_levels(
+        edges, sources, max_sources, seed, max_depth, True, "betweenness_superstep"
+    )
+    depth = len(levels) - 1
 
     # backward: delta per (source, v), deepest depth first; the per-depth
     # dependency rows fold into a running (v, partial) accumulator each
@@ -548,10 +512,12 @@ def betweenness_superstep(
     sym.unpersist()
     if acc is None:
         return verts.select("v", F.lit(0.0).alias("betweenness"))
-    out = verts.join(acc, "v", "left").select(
-        "v", F.coalesce("partial", F.lit(0.0)).alias("betweenness")
+    return project(
+        verts.join(acc, "v", "left"),
+        "v",
+        F.coalesce("partial", F.lit(0.0)).alias("betweenness"),
+        cut=acc,
     )
-    return out
 
 
 def harmonic_centrality(
@@ -568,12 +534,14 @@ def harmonic_centrality(
 
     The reference engine has no closeness-family transformer (its
     centrality files are eigenvector_centrality.rs and betweenness.rs);
-    this is a scale-path addition reusing the betweenness_superstep
-    forward machinery: all sources run simultaneously as (source, v)
-    BFS frontiers, one edge join + anti-join per depth, each level a
-    lazy cut leaf materialized by that depth's frontier count.  Source
-    sampling is the shared deterministic md5(seed|v) rank
-    (``_select_sources``), so runs are reproducible across engines.
+    this is a scale-path addition on the BFS that also drives
+    betweenness_superstep's forward pass (``paths.frontier_levels``,
+    symmetric and keyed by source, without sigma): all sources run
+    simultaneously as (source, v) BFS frontiers, one edge join +
+    anti-join per depth, each level a lazy cut leaf materialized by that
+    depth's frontier count.  Source sampling is the shared deterministic
+    md5(seed|v) rank (``_select_sources``), so runs are reproducible
+    across engines.
 
     Distributed shape: the per-depth state is the NEW frontier only
     (same O(|sources| x |V|) bound and release discipline as the
@@ -587,51 +555,12 @@ def harmonic_centrality(
 
     Returns DataFrame[v, harmonic] (harmonic rounded to 6 decimals).
     """
-    from ..plans.superstep import release
-
-    spark = edges.sparkSession
-    sym = symmetrized(edges).repartition("src").persist()
-    sym.count()
-    verts = vertices(sym)
-    src_df = _select_sources(spark, verts, sources, max_sources, seed)
-
-    levels = [
-        cut_lineage(src_df.select("source", F.col("source").alias("v")))
-    ]
-    depth = 0
-    while depth < max_depth:
-        frontier = levels[depth]
-        msgs = (
-            frontier.join(sym, frontier.v == sym.src)
-            .select("source", F.col("dst").alias("v"))
-            .distinct()
-        )
-        # last-two-levels dedup window — result-identical to the full
-        # visited union by the BFS distance property (see the comment in
-        # betweenness_superstep; BENCH/AB_VISITED_WINDOW_r07.txt)
-        visited = levels[depth]
-        if depth > 0:
-            visited = visited.union(levels[depth - 1])
-        # lazy cut — the count() materializes it (one job per depth; see
-        # the betweenness_superstep forward loop)
-        new = cut_lineage(
-            msgs.join(visited, ["source", "v"], "left_anti"), eager=False
-        )
-        if new.count() == 0:
-            release(new)
-            break
-        levels.append(new)
-        depth += 1
-    else:
-        raise RuntimeError(
-            f"harmonic_centrality: BFS did not exhaust in {max_depth} "
-            "levels; raise max_depth"
-        )
-
+    sym, verts, levels = _source_levels(
+        edges, sources, max_sources, seed, max_depth, False, "harmonic_centrality"
+    )
+    depth = len(levels) - 1
     if depth == 0:
-        for lv in levels:
-            release(lv)
-        sym.unpersist()
+        _release_levels(levels, sym)
         return verts.select("v", F.lit(0.0).alias("harmonic"))
 
     # per-depth reach counts: level d holds (source, v) pairs at exact
@@ -658,7 +587,5 @@ def harmonic_centrality(
         )
     )
     # out is an eager cut — the level leaves it read can be freed now
-    for lv in levels:
-        release(lv)
-    sym.unpersist()
+    _release_levels(levels, sym)
     return out

@@ -641,6 +641,12 @@ def trussness(edges: DataFrame, max_rounds: int = 10000) -> DataFrame:
             # first round of a stage: its drop count is not known yet
             n_drop = state.filter(F.col("support") < k - 2).count()
         new_state, gone = _support_round(state, k, n_drop, n_edges, retire)
+        if retire:
+            # a dense round (only those retire a triangle cut): persist the
+            # recount, so the gone cut (through shed) and iterate's seal
+            # evaluate it once; measure frees it after the seal
+            new_state = new_state.persist()
+            retire.append(new_state)
         labeled.append(
             cut_lineage(gone.select("src", "dst", F.lit(k - 1).alias("trussness")))
         )

@@ -50,7 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.superstep import cut_lineage, release, superstep_state_side
+from ..plans.superstep import cut_lineage, project, release, superstep_state_side
 
 
 def louvain_moves(edges: DataFrame, max_rounds: int = 6) -> DataFrame:
@@ -76,6 +76,7 @@ def louvain_moves(edges: DataFrame, max_rounds: int = 6) -> DataFrame:
     )
     m = canon.count()
     if m == 0:
+        release(canon)
         raise ValueError("louvain_moves: empty edge table")
     dir_e = canon.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
         canon.select(F.col("b").alias("src"), F.col("a").alias("dst"))
@@ -174,7 +175,7 @@ def louvain_moves(edges: DataFrame, max_rounds: int = 6) -> DataFrame:
         labels = labels_new
     dir_e.unpersist()
     release(canon)
-    return labels.select("v", F.col("c").alias("community"))
+    return project(labels, "v", F.col("c").alias("community"))
 
 
 def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:

@@ -26,10 +26,11 @@ shuffle), co-partitioned with a degree table, and each step is
 
 two equi-joins shuffling only the walker rows (V × walks_per_vertex,
 independent of E).  Walkers at dead ends (directed sinks) simply produce
-no row and the walk ends.  Lineage is cut every 3 steps (plan-doubling
-discipline, cf. bfs_distances).  At 10^12 edges the adjacency index is
-the one big shuffle; each of the L steps then shuffles only the walker
-frontier — the standard DeepWalk-on-Spark shape.
+no row and the walk ends.  Every step's walker frontier is a lineage
+cut: the two-join plan would otherwise double against the previous leg.
+At 10^12 edges the adjacency index is the one big shuffle; each of the L
+steps then shuffles only the walker frontier — the standard
+DeepWalk-on-Spark shape.
 """
 
 from __future__ import annotations

@@ -22,6 +22,7 @@ from dachshund_spark.operators.coreness import (
 from dachshund_spark.operators.label_propagation import label_propagation
 from dachshund_spark.operators.pagerank import pagerank
 from dachshund_spark.operators.paths import (
+    bfs_distances,
     shortest_path_dag,
     undirected_bfs_distances,
 )
@@ -197,6 +198,27 @@ def test_bfs_and_dag(spark):
     for r in dag.collect():
         got_parents.setdefault(r["v"], set()).add(r["parent"])
     assert got_parents == want_parents
+
+
+def _python_bfs(edges, source, max_depth):
+    out, frontier = {source: 0}, [source]
+    for depth in range(1, max_depth + 1):
+        frontier = [w for u, w in edges if u in frontier and w not in out]
+        out.update((w, depth) for w in frontier)
+    return out
+
+
+def test_directed_bfs_with_back_edges(spark):
+    """Back edges reach vertices two or more levels up (3->0, 5->1), so a
+    directed BFS must anti-join every visited level, not only the last
+    two; vertex 6 is unreachable from 0.  Depth 8 passes the eccentricity
+    (5); depth 2 truncates."""
+    edges = [(0, 1), (1, 2), (2, 3), (3, 0), (3, 4), (4, 5), (5, 1), (6, 0)]
+    e = B.edges_df(spark, edges)
+    for max_depth in (8, 2):
+        got = bfs_distances(e, 0, max_depth).collect()
+        assert len(got) == len({r["v"] for r in got})
+        assert {r["v"]: r["dist"] for r in got} == _python_bfs(edges, 0, max_depth)
 
 
 def test_label_propagation(spark):

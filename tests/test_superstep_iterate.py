@@ -8,8 +8,13 @@ import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dachshund_spark.operators.bowtie import bowtie_decomposition
 from dachshund_spark.operators.builders import edges_df, weighted_canonical
-from dachshund_spark.operators.centrality import betweenness
+from dachshund_spark.operators.centrality import (
+    betweenness,
+    betweenness_superstep,
+    harmonic_centrality,
+)
 from dachshund_spark.operators.components import (
     connected_components,
     is_acyclic,
@@ -20,11 +25,16 @@ from dachshund_spark.operators.coreness import (
     coreness_peel,
     k_core_vertices,
     k_truss_edges,
+    trussness,
     weighted_coreness,
 )
 from dachshund_spark.operators.dag import topological_levels
+from dachshund_spark.operators.louvain import louvain_moves
 from dachshund_spark.operators.pagerank import pagerank
-from dachshund_spark.operators.paths import double_sweep_diameter
+from dachshund_spark.operators.paths import (
+    double_sweep_diameter,
+    undirected_bfs_distances,
+)
 from dachshund_spark.operators.triangles import (
     clustering_coefficients,
     global_stats,
@@ -150,6 +160,14 @@ def _cc_not_converged(e):
         connected_components(e, max_iter=1)
 
 
+def _bfs_not_exhausted(op):
+    def run(e):
+        with pytest.raises(RuntimeError, match="did not exhaust"):
+            op(e, max_depth=1)
+
+    return run
+
+
 def _weighted_coreness_fixture5(e):
     # the harness hands over an unweighted frame; this case needs weights
     fixture = edges_df(e.sparkSession, weighted_graph_edges(5), weighted=True)
@@ -175,6 +193,14 @@ def _weighted_coreness_fixture5(e):
         (lambda e: k_truss_edges(e, 4), KARATE_CLUB_EDGES),
         (triangle_counts, KARATE_CLUB_EDGES),
         (clustering_coefficients, KARATE_CLUB_EDGES),
+        (lambda e: undirected_bfs_distances(e, 1), KARATE_CLUB_EDGES),
+        (harmonic_centrality, KARATE_CLUB_EDGES),
+        (lambda e: betweenness_superstep(e, max_sources=8), KARATE_CLUB_EDGES),
+        (_bfs_not_exhausted(harmonic_centrality), KARATE_CLUB_EDGES),
+        (_bfs_not_exhausted(betweenness_superstep), KARATE_CLUB_EDGES),
+        (bowtie_decomposition, _SCC_EDGES),
+        (lambda e: louvain_moves(e, max_rounds=2), KARATE_CLUB_EDGES),
+        (trussness, KARATE_CLUB_EDGES),
     ],
     ids=[
         "topological_levels",
@@ -193,6 +219,14 @@ def _weighted_coreness_fixture5(e):
         "k_truss_edges",
         "triangle_counts",
         "clustering_coefficients",
+        "undirected_bfs_distances",
+        "harmonic_centrality",
+        "betweenness_superstep",
+        "harmonic_centrality_not_exhausted",
+        "betweenness_superstep_not_exhausted",
+        "bowtie_decomposition",
+        "louvain_moves",
+        "trussness",
     ],
 )
 def test_operators_leave_only_their_output_cut(spark, op, edges):

@@ -5,6 +5,9 @@ order-insensitive values (columns sorted by name, rows sorted).
 
 Usage: python tools/check_correctness.py [sf_dir] [query ...] [--json out.json]
 
+Given query names, only those queries' kernel oracles are built
+(``requested_oracles``); with none, every oracle is.
+
 ``--json`` additionally writes a machine-readable artifact in the driver's
 CORRECTNESS_r{N}.json row format ({rows_match, schema_match, hash_match,
 spark_rows, oracle_rows, err} per query; oracle-less queries get null
@@ -50,6 +53,38 @@ def normalize(df, float_dp=9):
     return cols, out
 
 
+def requested_oracles(oracle_sql, names) -> dict:
+    """``oracle_sql()`` with only the kernel oracles of ``names`` built.
+
+    Every kernel oracle is a plain ``sql[name] = O.ora_*(...)`` assignment,
+    and building them all runs minutes of single-threaded Python whatever
+    was asked for.  So each ``dachshund_spark.oracles.ora_*`` is swapped,
+    for the one call, for a stand-in that records its arguments; only the
+    requested entries are then built, by the real functions."""
+    from dachshund_spark import oracles as O
+
+    real = {n: f for n, f in vars(O).items() if n.startswith("ora_") and callable(f)}
+
+    def defer(fn):
+        return lambda *a, **kw: (fn, a, kw)
+
+    for n, f in real.items():
+        setattr(O, n, defer(f))
+    try:
+        sql = oracle_sql()
+    finally:
+        for n, f in real.items():
+            setattr(O, n, f)
+    out = {}
+    for name in names & sql.keys():
+        entry = sql[name]
+        if isinstance(entry, tuple):
+            fn, a, kw = entry
+            entry = fn(*a, **kw)
+        out[name] = entry
+    return out
+
+
 def main():
     argv = sys.argv[1:]
     json_out = None
@@ -83,7 +118,7 @@ def main():
     # kernel oracles derive their expected values from the sf dir being
     # checked (the driver's default is sf0.01 — the gate scale)
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
-    oracles = E.oracle_sql()
+    oracles = requested_oracles(E.oracle_sql, only) if only else E.oracle_sql()
     failures = []
     records: dict[str, dict] = {}
     for name, fn in sorted(qs.items()):
